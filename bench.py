@@ -131,89 +131,6 @@ def run_bench(cores: int, sf_dir: str, names: list[str]) -> dict:
     return out
 
 
-def run_ab_merged(cores: int, sf_dir: str, rounds: int = 5) -> dict:
-    """Isolate the r2 extract_merged bench drift (VERDICT r2 ask #3): the
-    registered query changed between r1 (direct corpus expression, no
-    projection) and r2 (materialized_corpus + to_json) while the host also
-    decayed — this interleaves all four {corpus form} x {projection} cells
-    in ONE session on one host state, plus the one-time corpus
-    materialization cost measured separately, so each delta is attributable.
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ocr_suite_spark import datagen
-    from ocr_suite_spark.operators import extract as X
-    from ocr_suite_spark.session import get_spark
-
-    spark = get_spark(
-        cores=cores,
-        app="ocs-ab-merged",
-        shuffle_partitions=cores,
-        extra={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    # one-time materialization cost, measured alone (cold write vs warm
-    # read). The cache path mirrors datagen.materialized_corpus's scheme;
-    # the marker asserts keep this honest — if datagen's key derivation
-    # ever drifts, the cold run would silently hit a still-warm cache and
-    # underreport, so fail loudly instead.
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    cache_path = f"/tmp/ocs_corpus/{key}"
-    marker = f"{cache_path}/_SUCCESS"
-    shutil.rmtree(cache_path, ignore_errors=True)
-    assert not os.path.exists(marker)
-    t0 = time.time()
-    datagen.materialized_corpus(spark, sf_dir).count()
-    mat_cold = time.time() - t0
-    assert os.path.exists(marker), (
-        "datagen.materialized_corpus cache scheme drifted from bench.py's "
-        f"expectation ({cache_path}) — cold timing would be wrong"
-    )
-    t0 = time.time()
-    datagen.materialized_corpus(spark, sf_dir).count()
-    mat_warm = time.time() - t0
-
-    def tojson(df):
-        return df.select("doc_id", F.to_json("spans").alias("spans_json"))
-
-    forms = {
-        "r1_direct": lambda: X.extract(datagen.interleaved_from_documents(spark, sf_dir)),
-        "r1_direct_tojson": lambda: tojson(
-            X.extract(datagen.interleaved_from_documents(spark, sf_dir))
-        ),
-        "r2_materialized": lambda: X.extract(datagen.materialized_corpus(spark, sf_dir)),
-        "r2_materialized_tojson": lambda: tojson(
-            X.extract(datagen.materialized_corpus(spark, sf_dir))
-        ),
-    }
-    for fn in forms.values():  # warm every form before any timing
-        _materialize(fn())
-    walls: dict[str, list[float]] = {k: [] for k in forms}
-    for _ in range(rounds):  # interleaved: host drift hits all cells equally
-        for name, fn in forms.items():
-            t0 = time.time()
-            _materialize(fn())
-            walls[name].append(round(time.time() - t0, 3))
-    out = {
-        "metric": "ab_extract_merged_forms",
-        "unit": "sec",
-        "sf": _sf_of(sf_dir),
-        "cores": cores,
-        "rounds": rounds,
-        "materialize_cold_s": round(mat_cold, 3),
-        "materialize_warm_read_s": round(mat_warm, 3),
-        "forms": {
-            k: {"min": min(v), "median": sorted(v)[len(v) // 2], "all": v}
-            for k, v in walls.items()
-        },
-    }
-    spark.stop()
-    return out
-
-
 def _git(args: list[str]) -> str | None:
     try:
         return subprocess.run(
@@ -438,8 +355,6 @@ if __name__ == "__main__":
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "SCALING.json"), "w") as f:
             json.dump(res, f)
         print(json.dumps(res))
-    elif "--ab-merged" in args:
-        print(json.dumps(run_ab_merged(CPUS, SF_DIR)))
     elif "--flagship-once" in args:
         n_docs = int(args[args.index("--flagship-once") + 1])
         print(json.dumps(run_flagship_once(CPUS, n_docs)))

@@ -6,8 +6,9 @@ than 3 chars (tesseract.cpp:113-115, provider.h:26), generalized to whole
 text spans: tokenize on whitespace, keep tokens of length >= MIN_TOKEN_LEN,
 re-join with single spaces.
 
-``normalize_text`` (python) and the Column expression in
-operators/extract.py must stay semantically identical — tests enforce it.
+``normalize_text`` (python) and ``operators.extract.normalize_text_col`` —
+the " "-join of the single tokenizer expression ``tokens_col`` — must stay
+semantically identical, NULL/empty input -> "" included; tests enforce it.
 """
 
 from __future__ import annotations

@@ -22,13 +22,13 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import MIN_TOKEN_LEN
+from ..kernels import render, textnorm
+from ..kernels.ocr import Recognizer
+from .memo import QUARANTINED, map_media
 
 _FLAT_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
 # salt-partition sizing: ~45 measured bytes/row in Catalyst's estimate for
@@ -41,18 +41,24 @@ _WORDS_SCHEMA = (
 )
 
 
-def normalize_text_col(c: Column) -> Column:
-    """Column-expression twin of kernels.textnorm.normalize_text.
+def tokens_col(text: Column) -> Column:
+    """Whitespace tokens of length >= MIN_TOKEN_LEN — the one tokenizer
+    expression (reference tesseract.cpp:113-115), shared by the text-path
+    normalizer and every query (re-exported as queries.common.tokens_col).
+    No trim: the length filter drops the empty edge tokens a split
+    produces, and the engines' trims disagree on unicode whitespace (DuckDB
+    strips NBSP, Spark/Java strip ASCII space only) — see
+    tests/test_textnorm_property.py. DuckDB twin: queries.common.DUCK_TOKENS.
+    NULL text yields NULL."""
+    return F.filter(F.split(text, r"\s+"), lambda x: F.length(x) >= MIN_TOKEN_LEN)
 
-    ASCII-whitespace split -> drop tokens shorter than MIN_TOKEN_LEN ->
-    re-join. Mirrors /root/reference util.h:13-26 + tesseract.cpp:113-115.
-    No trim: the length filter drops empty edge tokens, and engine trims
-    disagree on unicode whitespace (tests/test_textnorm_property.py).
+
+def normalize_text_col(c: Column) -> Column:
+    """Column-expression twin of kernels.textnorm.normalize_text:
+    tokens_col re-joined with single spaces; NULL text becomes "" like the
+    python twin. Mirrors reference util.h:13-26 + tesseract.cpp:113-115.
     """
-    toks = F.filter(
-        F.split(c, r"\s+"), lambda t: F.length(t) >= MIN_TOKEN_LEN
-    )
-    return F.array_join(toks, " ")
+    return F.coalesce(F.array_join(tokens_col(c), " "), F.lit(""))
 
 
 def explode_spans(documents: DataFrame) -> DataFrame:
@@ -89,118 +95,50 @@ def explode_media_meta(documents: DataFrame) -> DataFrame:
     )
 
 
-def make_ocr_fn(meter=None, on_error: str = "fail"):
-    """Build the mapInPandas fn: (doc_id, offset, media_ref) -> + recognized
-    text.
+def _decode_ref(row):
+    """Media row -> grayscale image: resolve + decode (booked as decode_s)."""
+    return render.decode_image(render.resolve_media(row.media_ref))
 
-    Iterator-init idiom: the recognizer (template bank) is built once per
-    python worker, then streams Arrow batches — the canonical expensive-init
-    vectorized UDF pattern (SURVEY.md F1). With a SpeedMeter, per-batch
-    decode/recognize wall time rides back on accumulators (speed_meter
-    analog, speed_meter.cpp:35-58).
 
-    on_error:
-      - 'fail' (default): any decode/recognize exception propagates — task
-        retries, then the job dies. Right for correctness-graded runs.
-      - 'quarantine': the span survives with text = NULL (distinguishable
-        from '' = clean image with no >=3-char words) and the SpeedMeter's
-        n_errors accumulator counts it. At 10^12 documents a handful of
-        corrupt payloads are a certainty, and one poison row must cost one
-        row, not a 1000-executor job (the reference logs-and-continues the
-        same way on decoder errors, src/ffmpeg/decoder.cpp error paths).
-    """
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
+def _recognizer(to_value):
+    """Per-worker init: the recognizer (template bank) is built once per
+    Python worker, then every fresh image maps to to_value(words)."""
 
-    def _ocr_text_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import textnorm
-        from ..kernels.ocr import Recognizer
-        from .memo import QUARANTINED, BatchStats, RefMemo, make_media_compute
-
+    def init():
         eng = Recognizer()
-        stats = BatchStats()
-        memo = RefMemo(
-            make_media_compute(
-                lambda img: textnorm.ocr_words_to_text(
-                    [w.text for w in eng.recognize(img)]
-                ),
-                on_error,
-                stats,
-            )
-        )
-        for pdf in batches:
-            stats.reset()
-            texts = [
-                None if (t := memo.get(ref)) is QUARANTINED else t
-                for ref in pdf["media_ref"]
-            ]
-            stats.flush(meter)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "order": pdf["offset"],
-                    "kind": "media",
-                    "text": texts,
-                    "media_ref": pdf["media_ref"],
-                }
-            )
+        return lambda img: to_value(eng.recognize(img))
 
-    return _ocr_text_batches
+    return init
 
 
-# default un-metered instance (used by queries and tests)
-_ocr_text_batches = make_ocr_fn(None)
+def _span_text(words) -> str:
+    return textnorm.ocr_words_to_text([w.text for w in words])
 
 
-def make_ocr_words_fn(meter=None, on_error: str = "fail"):
-    """Word-level variant of make_ocr_fn: one output row per recognized word
-    with bbox + confidence (reference text_entry, ocr_result.h:14-18).
+def _word_tuples(words) -> list[tuple]:
+    return [
+        (w.text, w.left, w.top, w.right, w.bottom, w.confidence)
+        for w in words
+        # provider min-length filter, tesseract.cpp:113-115
+        if len(w.text.strip()) >= MIN_TOKEN_LEN
+    ]
 
-    Same hardening as the text path (it lacked both in r2): per-worker
-    memoization of recognized word tuples per media_ref, and
-    on_error='quarantine' — a corrupt payload yields zero word rows for
-    that span (counted once per distinct ref on meter.n_errors) instead of
-    killing the job."""
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
 
-    def _ocr_words_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.ocr import Recognizer
-        from .memo import QUARANTINED, BatchStats, RefMemo, make_media_compute
+def _emit_text(row, text) -> list[tuple]:
+    """One span per media row; a quarantined payload keeps its span with
+    text = NULL (distinguishable from '' = clean image with no >=3-char
+    words)."""
+    if text is QUARANTINED:
+        text = None
+    return [(row.doc_id, row.offset, "media", text, row.media_ref)]
 
-        eng = Recognizer()
-        stats = BatchStats()
-        memo = RefMemo(
-            make_media_compute(
-                lambda img: [
-                    (w.text, w.left, w.top, w.right, w.bottom, w.confidence)
-                    for w in eng.recognize(img)
-                    # provider min-length filter, tesseract.cpp:113-115
-                    if len(w.text.strip()) >= MIN_TOKEN_LEN
-                ],
-                on_error,
-                stats,
-            )
-        )
-        for pdf in batches:
-            rows = []
-            stats.reset()
-            for doc_id, offset, ref in zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]):
-                words = memo.get(ref)
-                if words is QUARANTINED:
-                    continue  # span contributes no word rows
-                for w in words:
-                    rows.append((doc_id, offset, ref, *w))
-            stats.flush(meter)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "order", "media_ref", "word",
-                    "left", "top", "right", "bottom", "confidence",
-                ],
-            )
 
-    return _ocr_words_batches
+def _emit_words(row, words) -> list[tuple]:
+    """One row per recognized word (reference text_entry,
+    ocr_result.h:14-18); a quarantined payload yields no rows."""
+    if words is QUARANTINED:
+        return []
+    return [(row.doc_id, row.offset, row.media_ref, *w) for w in words]
 
 
 def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
@@ -255,7 +193,7 @@ def extract_flat(
 
     on_error='quarantine' lets corrupt media payloads survive as NULL-text
     spans (counted on meter.n_errors) instead of failing the job — see
-    make_ocr_fn."""
+    memo.map_media."""
     ex = explode_spans(documents)
     text_out = ex.where(F.col("kind") == "text").select(
         "doc_id",
@@ -265,8 +203,9 @@ def extract_flat(
         F.col("media_ref"),
     )
     media_in = explode_media_meta(documents)  # pruned scan: no text field
-    media_out = _salted(media_in, salt_partitions).mapInPandas(
-        make_ocr_fn(meter, on_error=on_error), schema=_FLAT_SCHEMA
+    media_out = map_media(
+        _salted(media_in, salt_partitions), _FLAT_SCHEMA, _decode_ref,
+        _recognizer(_span_text), _emit_text, meter=meter, on_error=on_error,
     )
     return text_out.unionByName(media_out)
 
@@ -312,8 +251,10 @@ def extract_words(
     meter=None,
     on_error: str = "fail",
 ) -> DataFrame:
-    """Word-level OCR output with bboxes (reference ocr_result entries)."""
+    """Word-level OCR output with bboxes (reference ocr_result entries);
+    under on_error='quarantine' a corrupt payload drops that span's words."""
     media_in = explode_media_meta(documents)  # pruned scan: no text field
-    return _salted(media_in, salt_partitions).mapInPandas(
-        make_ocr_words_fn(meter, on_error=on_error), schema=_WORDS_SCHEMA
+    return map_media(
+        _salted(media_in, salt_partitions), _WORDS_SCHEMA, _decode_ref,
+        _recognizer(_word_tuples), _emit_words, meter=meter, on_error=on_error,
     )

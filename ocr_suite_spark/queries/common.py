@@ -7,7 +7,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import MIN_TOKEN_LEN
+from ..operators.extract import tokens_col  # noqa: F401  (the one tokenizer)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,18 +38,7 @@ def golden_sql(name: str) -> str:
     return f"SELECT * FROM read_parquet('{GOLDEN_DIR}/{name}.parquet')"
 
 
-def tokens_col(text: Column) -> Column:
-    """Whitespace tokens of length >= MIN_TOKEN_LEN (the core normalizer,
-    reference tesseract.cpp:113-115). No trim: the length filter drops the
-    empty edge tokens a split produces, and the engines' trims disagree on
-    unicode whitespace (DuckDB strips NBSP, Spark/Java strip ASCII space
-    only) — see tests/test_textnorm_property.py. DuckDB twin: DUCK_TOKENS."""
-    return F.filter(
-        F.split(text, r"\s+"), lambda x: F.length(x) >= MIN_TOKEN_LEN
-    )
-
-
-# DuckDB fragment for the same token list. Explicit ASCII-whitespace class,
+# DuckDB twin of tokens_col (operators/extract.py). Explicit ASCII-whitespace class,
 # NOT \s: RE2's \s is [\t\n\f\r ] (no vertical tab) while Java's and
 # Python-ASCII's \s include \x0b — a bare \s here would silently diverge on
 # \v-containing text (covered in tests/test_textnorm_property.py).

@@ -23,80 +23,55 @@ shared Spark-free kernels); ``media_frame_sample`` is pure relational
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen
+from ..kernels import audio, render, video
+from ..kernels.ocr import Recognizer, _runs, binarize, otsu_stats
+from ..operators.extract import explode_media_meta
+from ..operators.memo import map_media, with_payload
 from .common import golden_sql, t
 
 _FRAME_STRIDE = 2  # keep every 2nd media span per doc (I/P-frame analog)
 
 
 def _media_bytes(spark: SparkSession, sf: str) -> DataFrame:
-    """(doc_id, offset, media_ref, content:binary) — resolve refs to bytes.
-
-    The resolve step stands in for 'fetch + demux'; at real scale `content`
-    would arrive as a column of the Iceberg table or via binaryFile scan
-    (S5), with identical downstream plumbing.
-    """
-    from ..operators.extract import explode_media_meta
-
+    """(doc_id, offset, media_ref, content:binary) — resolve refs to bytes."""
     docs = datagen.materialized_corpus(spark, sf)
     media = explode_media_meta(docs)  # pruned scan: no text field
+    return with_payload(media, "media_ref", render.resolve_media)
 
-    def resolve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import render
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"],
-                    "media_ref": pdf["media_ref"],
-                    "content": [render.resolve_media(r) for r in pdf["media_ref"]],
-                }
-            )
+def _image(row) -> np.ndarray:
+    return render.decode_image(bytes(row.content))
 
-    return media.mapInPandas(
-        resolve, "doc_id string, offset int, media_ref string, content binary"
-    )
+
+def _ink_meta(img: np.ndarray) -> tuple:
+    h, w = img.shape
+    return (w, h, round(float(binarize(img).mean()), 4))
 
 
 def media_decode_meta(spark: SparkSession, sf: str) -> DataFrame:
     """Decode each media payload and emit typed metadata
-    (width, height, n_bytes, ink_fraction at the Otsu threshold)."""
-    src = _media_bytes(spark, sf)
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import render
-        from ..kernels.ocr import binarize
-        from ..operators.memo import RefMemo
-
-        def compute(ref, data):
-            img = render.decode_image(bytes(data))
-            h, w = img.shape
-            ink = float(binarize(img).mean())
-            return (w, h, len(data), round(ink, 4))
-
-        # per-worker, keyed on media_ref — same repeated-payload defense as
-        # the OCR path (make_ocr_fn)
-        memo = RefMemo(compute)
-        for pdf in batches:
-            rows = []
-            for doc_id, offset, ref, data in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["content"]
-            ):
-                rows.append((doc_id, int(offset), *memo.get(ref, data)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "width", "height", "n_bytes", "ink_frac"]
-            )
-
-    return src.mapInPandas(
-        meta, "doc_id string, offset int, width int, height int, n_bytes int, ink_frac double"
+    (width, height, n_bytes, ink_fraction at the Otsu threshold); memoized
+    per worker on media_ref like the OCR path."""
+    return map_media(
+        _media_bytes(spark, sf),
+        "doc_id string, offset int, width int, height int, n_bytes int, ink_frac double",
+        _image,
+        lambda: _ink_meta,
+        lambda r, m: [(r.doc_id, int(r.offset), m[0], m[1], len(r.content), m[2])],
     )
+
+
+def _half_size(img: np.ndarray) -> tuple:
+    h2, w2 = (img.shape[0] // 2) * 2, (img.shape[1] // 2) * 2
+    small = (
+        img[:h2, :w2].reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
+    ).astype("uint8")
+    return (small.shape[1], small.shape[0], len(render.encode_image(small)))
 
 
 def media_resize_meta(spark: SparkSession, sf: str) -> DataFrame:
@@ -105,75 +80,41 @@ def media_resize_meta(spark: SparkSession, sf: str) -> DataFrame:
     produced and re-encoded — only the metadata is projected out, which is
     what a downstream thumbnail/size audit would select (column pruning
     keeps the bytes out of the shuffle)."""
-    src = _media_bytes(spark, sf)
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import render
-        from ..operators.memo import RefMemo
-
-        def compute(ref, data):
-            img = render.decode_image(bytes(data))
-            h2, w2 = (img.shape[0] // 2) * 2, (img.shape[1] // 2) * 2
-            small = (
-                img[:h2, :w2].reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-            ).astype("uint8")
-            out = render.encode_image(small)
-            return (small.shape[1], small.shape[0], len(out))
-
-        memo = RefMemo(compute)
-        for pdf in batches:
-            rows = []
-            for doc_id, offset, ref, data in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["content"]
-            ):
-                rows.append((doc_id, int(offset), *memo.get(ref, data)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "offset", "width", "height", "n_bytes"]
-            )
-
-    return src.mapInPandas(
-        resize, "doc_id string, offset int, width int, height int, n_bytes int"
+    return map_media(
+        _media_bytes(spark, sf),
+        "doc_id string, offset int, width int, height int, n_bytes int",
+        _image,
+        lambda: _half_size,
+        lambda r, v: [(r.doc_id, int(r.offset), *v)],
     )
+
+
+def _first_word_grid(img: np.ndarray) -> list[float]:
+    thresh, _ = otsu_stats(img)
+    mask = img <= thresh
+    vec = np.zeros(35, dtype=np.float32)
+    lines = _runs(mask.any(axis=1))
+    if lines:
+        line = mask[lines[0][0] : lines[0][1]]
+        cols = _runs(line.any(axis=0))
+        if cols:
+            vec = Recognizer._pool(
+                line[:, cols[0][0] : cols[0][1]].astype(np.float32)
+            ).ravel()
+    return [float(v) for v in vec]
 
 
 def media_feature_vectors(spark: SparkSession, sf: str) -> DataFrame:
     """Feature-extract: the recognizer's own 7x5 mean-ink grid of the first
     segmented word as a dense array<float> embedding per media span —
     the same downsampling kernel the OCR matcher scores against."""
-    src = _media_bytes(spark, sf)
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..kernels import render
-        from ..kernels.ocr import Recognizer, _runs, otsu_stats
-        from ..operators.memo import RefMemo
-
-        def compute(ref, data):
-            img = render.decode_image(bytes(data))
-            thresh, _ = otsu_stats(img)
-            mask = img <= thresh
-            vec = np.zeros(35, dtype=np.float32)
-            lines = _runs(mask.any(axis=1))
-            if lines:
-                line = mask[lines[0][0] : lines[0][1]]
-                cols = _runs(line.any(axis=0))
-                if cols:
-                    vec = Recognizer._pool(
-                        line[:, cols[0][0] : cols[0][1]].astype(np.float32)
-                    ).ravel()
-            return [float(v) for v in vec]
-
-        memo = RefMemo(compute)
-        for pdf in batches:
-            rows = []
-            for doc_id, offset, ref, data in zip(
-                pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["content"]
-            ):
-                rows.append((doc_id, int(offset), memo.get(ref, data)))
-            yield pd.DataFrame(rows, columns=["doc_id", "offset", "feature"])
-
-    return src.mapInPandas(feats, "doc_id string, offset int, feature array<float>")
+    return map_media(
+        _media_bytes(spark, sf),
+        "doc_id string, offset int, feature array<float>",
+        _image,
+        lambda: _first_word_grid,
+        lambda r, v: [(r.doc_id, int(r.offset), v)],
+    )
 
 
 def media_features(spark: SparkSession, sf: str) -> DataFrame:
@@ -260,59 +201,23 @@ def media_audio_meta(spark: SparkSession, sf: str) -> DataFrame:
     with a real corpus the resolve stage is the Iceberg binary column /
     binaryFile scan and the plumbing downstream is identical."""
     docs = t(spark, sf, "documents").select("doc_id")
-
-    def resolve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import audio
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [audio.resolve_audio(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    src = docs.mapInPandas(resolve, "doc_id long, content binary")
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..kernels import audio
-        from ..operators.memo import RefMemo
-
-        def compute(doc_id, data):
-            rate, s = audio.decode_audio(bytes(data))
-            sq = s.astype(np.int64)
-            n = int(s.size)
-            rms = float(np.sqrt(int((sq * sq).sum()) / n))  # exact: sqrt(a²)=a
-            return (
-                rate,
-                n,
-                n * 1000 // rate,
-                int(round(rms)),
-                int(np.abs(sq).max()),
-                len(data),
-            )
-
-        memo = RefMemo(compute)  # keyed on doc_id — same plumbing as images
-        for pdf in batches:
-            rows = [
-                (int(d), *memo.get(int(d), c))
-                for d, c in zip(pdf["doc_id"], pdf["content"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rate", "n_samples", "duration_ms",
-                    "rms", "peak", "n_bytes",
-                ],
-            )
-
-    return src.mapInPandas(
-        meta,
+    return map_media(
+        with_payload(docs, "doc_id", audio.resolve_audio),
         "doc_id long, rate int, n_samples long, duration_ms long, "
         "rms long, peak long, n_bytes long",
+        lambda r: audio.decode_audio(bytes(r.content)),
+        lambda: _audio_meta,
+        lambda r, m: [(int(r.doc_id), *m, len(r.content))],
+        key="doc_id",
     )
+
+
+def _audio_meta(decoded) -> tuple:
+    rate, s = decoded
+    sq = s.astype(np.int64)
+    n = int(s.size)
+    rms = float(np.sqrt(int((sq * sq).sum()) / n))  # exact: sqrt(a²)=a
+    return (rate, n, n * 1000 // rate, int(round(rms)), int(np.abs(sq).max()))
 
 
 def _duck_hex(start: int, n: int) -> str:
@@ -374,60 +279,30 @@ def media_video_meta(spark: SparkSession, sf: str) -> DataFrame:
     explode happens INSIDE the second UDF (one input row → n_frames
     output rows), so no array column is shuffled either."""
     docs = t(spark, sf, "documents").select("doc_id")
-
-    def resolve(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import video
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": [video.resolve_video(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    src = docs.mapInPandas(resolve, "doc_id long, content binary")
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import video
-        from ..operators.memo import RefMemo
-
-        def compute(doc_id, data):
-            frames = video.decode_video(bytes(data))
-            n = len(data)
-            return [
-                (
-                    f,
-                    f * 1000 // video.FPS,
-                    fr.shape[1],
-                    fr.shape[0],
-                    int(fr.min()),
-                    int(fr.sum()),
-                    12 + fr.shape[0] * fr.shape[1],
-                    n,
-                )
-                for f, fr in enumerate(frames)
-            ]
-
-        memo = RefMemo(compute)  # keyed on doc_id — same plumbing as audio
-        for pdf in batches:
-            rows = []
-            for d, c in zip(pdf["doc_id"], pdf["content"]):
-                for frame_row in memo.get(int(d), c):
-                    rows.append((int(d), *frame_row))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "ts_ms", "width", "height",
-                    "gray", "pixel_sum", "frame_bytes", "clip_bytes",
-                ],
-            )
-
-    return src.mapInPandas(
-        meta,
+    return map_media(
+        with_payload(docs, "doc_id", video.resolve_video),
         "doc_id long, frame_idx int, ts_ms long, width int, height int, "
         "gray long, pixel_sum long, frame_bytes long, clip_bytes long",
+        lambda r: video.decode_video(bytes(r.content)),
+        lambda: _frame_meta,
+        lambda r, frames: [(int(r.doc_id), *f, len(r.content)) for f in frames],
+        key="doc_id",
     )
+
+
+def _frame_meta(frames) -> list[tuple]:
+    return [
+        (
+            f,
+            f * 1000 // video.FPS,
+            fr.shape[1],
+            fr.shape[0],
+            int(fr.min()),
+            int(fr.sum()),
+            12 + fr.shape[0] * fr.shape[1],
+        )
+        for f, fr in enumerate(frames)
+    ]
 
 
 def media_video_frames(spark: SparkSession, sf: str) -> DataFrame:

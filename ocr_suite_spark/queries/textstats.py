@@ -4,7 +4,7 @@ document fingerprinting (winnowing)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .common import DUCK_TOKENS, floor3, t, tokens_col
@@ -726,7 +726,7 @@ DSIR_BUCKETS = 1024
 DSIR_TARGET_LANG = "en"
 
 
-def _dsir_bigrams(toks: "F.Column") -> "F.Column":
+def _dsir_bigrams(toks: Column) -> Column:
     """Ordered 2-token grams of the normalized token list (shingles_col
     with K=2; kept local so dedup's K=3 constant stays single-purpose)."""
     return F.when(

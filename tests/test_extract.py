@@ -80,7 +80,7 @@ def test_normalizer_column_matches_python(spark, sf_dir):
         assert r["norm"] == normalize_text(r["text"])
     # edge cases through a literal DataFrame
     edge = spark.createDataFrame(
-        [("",), ("  ",), (" ab  x ",), ("abc  de fgh  ",)], "text string"
+        [("",), ("  ",), (" ab  x ",), ("abc  de fgh  ",), (None,)], "text string"
     )
     for r in edge.select("text", X.normalize_text_col(F.col("text")).alias("n")).collect():
         assert r["n"] == normalize_text(r["text"])
@@ -247,6 +247,15 @@ def test_extract_edge_inputs(spark):
     )
     rows = {r["doc_id"]: r["spans"] for r in X.extract(text_only).collect()}
     assert [s["text"] for s in rows["t1"]] == ["alpha gamma"]  # min-len strip
+
+    # a NULL-text span normalizes to "" like the python twin and the oracle
+    null_text = spark.createDataFrame(
+        [("n1", [{"kind": "text", "text": None, "media_ref": None, "offset": 0}])],
+        DOCUMENTS,
+    )
+    rows = {r["doc_id"]: r["spans"] for r in X.extract(null_text).collect()}
+    assert [(s["kind"], s["text"]) for s in rows["n1"]] == [("text", "")]
+    assert extract_pandas(null_text.toPandas())["n1"] == [("text", "", None, 0)]
 
     from ocr_suite_spark.kernels.render import make_media_ref
 

@@ -167,3 +167,69 @@ def test_ref_memo_fifo_and_none_values():
     assert len(calls) == n
     memo.get("none-ref")
     assert len(calls) == n + 1
+
+
+def test_media_batch_loop_without_spark():
+    """The one media batch loop (memo.media_batches) on plain pandas frames:
+    a repeated key computes once, a failing key is quarantined once and its
+    emitter sees QUARANTINED, n_images counts fresh computes only, 0- and
+    n-row emitters build the right frame, and on_error='fail' propagates."""
+    import pandas as pd
+
+    from ocr_suite_spark.operators.memo import QUARANTINED, media_batches
+
+    class Acc:
+        def __init__(self):
+            self.value = 0
+
+        def add(self, v):
+            self.value += v
+
+    class Meter:
+        def __init__(self):
+            self.n_images, self.decode_s, self.ocr_s, self.n_errors = (
+                Acc(), Acc(), Acc(), Acc()
+            )
+
+    calls = []
+
+    def decode(row):
+        calls.append(row.media_ref)
+        if row.media_ref == "bad":
+            raise ValueError("corrupt payload")
+        return row.media_ref * row.n
+
+    seen = []
+
+    def emit(row, v):
+        seen.append((row.media_ref, v))
+        if v is QUARANTINED:
+            return []  # a quarantined span yields no rows
+        return [(row.doc_id, row.media_ref, i) for i in range(row.n)]
+
+    batches = [
+        pd.DataFrame({"doc_id": ["d1", "d2", "d3"], "media_ref": ["a", "bad", "a"], "n": [2, 1, 2]}),
+        pd.DataFrame({"doc_id": ["d4", "d5"], "media_ref": ["bad", "b"], "n": [1, 0]}),
+    ]
+    names = ["doc_id", "media_ref", "i"]
+    meter = Meter()
+    out = list(
+        media_batches(iter(batches), names, decode, lambda: str.upper, emit,
+                      meter=meter, on_error="quarantine")
+    )
+    assert calls == ["a", "bad", "b"]  # "a" and "bad" each computed once
+    assert meter.n_images.value == 3  # fresh computes only, not 5 rows
+    assert meter.n_errors.value == 1
+    assert [v for r, v in seen if r == "bad"] == [QUARANTINED, QUARANTINED]
+    assert [list(f.columns) for f in out] == [names, names]
+    assert out[0].values.tolist() == [["d1", "a", 0], ["d1", "a", 1], ["d3", "a", 0], ["d3", "a", 1]]
+    assert out[1].empty  # quarantined row + a 0-row emit: no rows, same columns
+
+    # key=None: no memo, every row computes
+    calls.clear()
+    out = list(media_batches(iter(batches[:1]), names, decode, lambda: str.upper, emit,
+                             key=None, on_error="quarantine"))
+    assert calls == ["a", "bad", "a"]
+
+    with pytest.raises(ValueError, match="corrupt payload"):
+        list(media_batches(iter(batches), names, decode, lambda: str.upper, emit))

@@ -130,15 +130,20 @@ def test_grading_prefix_covers_unproven_queries():
 
 def _frozen_body_hash(name: str) -> str:
     """md5 of the query fn's source + its rendered oracle SQL — the freeze
-    fingerprint. Limitation (disclosed): source hashing sees the query
-    body, not its callee graph; kernel-path value identity is separately
-    guarded by the golden fixtures at two SFs."""
+    fingerprint. The checkout's own path is replaced by a fixed placeholder
+    in the SQL (an oracle reading a repo fixture embeds it), so the hash is
+    the same from any checkout path. Limitation (disclosed): source hashing
+    sees the query body, not its callee graph; kernel-path value identity
+    is separately guarded by the golden fixtures at two SFs."""
     import hashlib
     import inspect
 
+    from ocr_suite_spark.queries.common import _REPO_ROOT
+
     fn, sql = REGISTRY[name]
     src = inspect.getsource(fn)
-    return hashlib.md5((src + "\0" + (sql or "")).encode()).hexdigest()
+    sql = (sql or "").replace(_REPO_ROOT, "<repo>")
+    return hashlib.md5((src + "\0" + sql).encode()).hexdigest()
 
 
 def test_frozen_bodies_unchanged():
