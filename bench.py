@@ -8,6 +8,8 @@ Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
      "queries": {...per-query sec...}, "sf": ...,
      "docs_per_sec": ..., "n_docs": ...}
 
+$SPARK_GRAFT_CPUS defaults to the number of CPUs this process may run on.
+
 --scaling: run the flagship extraction at two parallelism levels (N=8,
 4N=32 threads — the sandbox stand-in for N vs 4N executors, same input,
 same artifact) in fresh subprocesses and report throughput at both plus
@@ -22,8 +24,10 @@ import subprocess
 import sys
 import time
 
+from ocr_suite_spark.session import default_cores
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 
 HEADLINE = [
     "extract_merged",

@@ -6,7 +6,7 @@ Tesseract provider (/root/reference src/recognition/provider/tesseract.cpp):
 word-level iteration (RIL_WORD, tesseract.cpp:98-99), per-word bbox +
 confidence (tesseract.cpp:102-106), deterministic output as a pure function
 of pixel content. Expensive state (the template bank) is built once per
-``Recognizer`` instance — per python worker in the Spark UDF, mirroring the
+``Recognizer`` instance — once per task in the Spark UDF, mirroring the
 reference's per-thread Tesseract instance (main.cpp:136-177).
 """
 
@@ -145,7 +145,7 @@ def _runs(flags: np.ndarray) -> list[tuple[int, int]]:
 class Recognizer:
     """Template-matching recognizer over the shared glyph bank.
 
-    Instantiate once per worker (expensive-init idiom, SURVEY.md F1); then
+    Instantiate once per task (expensive-init idiom, SURVEY.md F1); then
     ``recognize`` is a pure function of the image.
     """
 

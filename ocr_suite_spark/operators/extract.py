@@ -6,7 +6,7 @@ decode frames -> bounded queue -> OCR threads -> per-frame store, i.e.
     documents --explode--> spans --route by kind-->
         text path  : boilerplate-strip normalizer (pure Column exprs)
         media path : salt -> repartition -> mapInPandas OCR (Arrow batches,
-                     per-worker recognizer init = reference's per-thread
+                     per-task recognizer init = reference's per-thread
                      Tesseract instance, main.cpp:136-177)
     --union--> flat extracted spans --groupBy(doc_id) + sort by offset-->
     merged (kind, text, media_ref, order) sequences.
@@ -31,9 +31,7 @@ from ..kernels.ocr import Recognizer
 from .memo import QUARANTINED, map_media
 
 _FLAT_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
-# salt-partition sizing: ~45 measured bytes/row in Catalyst's estimate for
-# the (doc_id, offset, media_ref) projection; ~512 rows (~2 s of OCR) per task
-_EST_BYTES_PER_ROW = 48
+# salt-partition sizing: ~512 media spans (~2 s of OCR) per task
 _TARGET_ROWS_PER_TASK = 512
 _WORDS_SCHEMA = (
     "doc_id string, order int, media_ref string, word string, "
@@ -101,8 +99,8 @@ def _decode_ref(row):
 
 
 def _recognizer(to_value):
-    """Per-worker init: the recognizer (template bank) is built once per
-    Python worker, then every fresh image maps to to_value(words)."""
+    """Per-task init: the recognizer (template bank) is built once per
+    task, then every fresh image maps to to_value(words)."""
 
     def init():
         eng = Recognizer()
@@ -158,27 +156,21 @@ def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
     (event-log: 96-98% at 24 slots) but paid its two exchanges as
     *sequential* jobs under AQE — strictly worse.
 
-    Partition count is sized from the DATA (Catalyst's sizeInBytes
-    estimate — free, no extra scan), not from the cluster: each warm
-    mapInPandas task costs ~0.18 core-s of fixed setup (measured), so a
-    count proportional to cores would over-decompose small inputs and
-    make the big-cluster level pay 4x the task overhead of the small one
-    in an N-vs-4N comparison. Clamped to [1.5x, 10x] parallelism so tasks
-    stay wave-schedulable at any size — the floor was 2x until r4; an
-    interleaved 5-round A/B at sf0.1/local[32] measured 64 tasks at
-    median 3.36 s vs 48 tasks at 2.72 s (salted task costs are
-    near-uniform, so the extra wave bought balance we don't need and paid
-    per-task setup we do). AQE coalescing is NOT used here on purpose:
-    it targets partition bytes, and these rows are bytes-tiny but
-    compute-heavy.
+    Partition count is sized from the DATA, not from the cluster: an exact
+    media.count() (a JVM-only job; Catalyst's sizeInBytes ignores filter
+    selectivity) at ~512 spans per task. No output value depends on it.
+    Each mapInPandas task pays a fixed ~0.3 core-s (measured, 4-vCPU
+    host), so a cores-sized count over-decomposes small inputs. Clamped to
+    [1.5x, 10x] parallelism so tasks stay wave-schedulable: at
+    sf0.1/local[32], 64 tasks measured median 3.36 s vs 48 tasks 2.72 s
+    (near-uniform salted task costs need no extra wave). AQE coalescing
+    is NOT used on purpose: it targets partition bytes, and these rows are
+    bytes-tiny but compute-heavy.
     """
-    spark = media.sparkSession
-    if salt_partitions:
-        n = salt_partitions
-    else:
-        cores = spark.sparkContext.defaultParallelism
-        est_rows = int(media._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()) / _EST_BYTES_PER_ROW
-        n = int(min(max(est_rows / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
+    n = salt_partitions
+    if not n:
+        cores = media.sparkSession.sparkContext.defaultParallelism
+        n = int(min(max(media.count() / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
     salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n * 4))
     return media.repartition(n, salt)
 

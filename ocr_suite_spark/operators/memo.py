@@ -3,15 +3,15 @@
 Every vectorized media UDF — OCR text and OCR words (operators/extract.py);
 decode-meta, resize, features, audio and video (queries/multimodal.py); the
 payload-resolve step ``with_payload`` below — is a ``map_media`` call: a
-decode stage, a per-worker init that returns the value function, and an
+decode stage, a per-task init that returns the value function, and an
 emitter mapping an input row plus its value to 0..n output rows. Decode
 and value are separate stages so the SpeedMeter can book decode_s and
 ocr_s apart. The loop owns the rest:
 
-- per-worker memoization keyed on ``media_ref`` (or ``doc_id``): a payload
-  repeated across many rows is decoded and computed once per worker
-  (reference analog: the per-thread provider instance,
-  reference src/recognition/main.cpp:136-177);
+- per-task memoization keyed on ``media_ref`` (or ``doc_id``): a payload
+  repeated within one task (partition) is decoded and computed once; the
+  memo lives for the task, not the Python worker (reference analog: the
+  per-thread provider instance, reference src/recognition/main.cpp:136-177);
 - the memo is bounded: past ``cap`` distinct keys the oldest entry is
   evicted (FIFO single-eviction — dicts iterate in insertion order, so
   ``next(iter(d))`` is the oldest key). Clear-all eviction is the thrash
@@ -154,8 +154,8 @@ def map_media(
     """``df.mapInPandas`` through the one media batch loop (``media_batches``).
 
     ``decode(row)`` turns an input row into a decoded payload; ``init()``
-    runs once per Python worker (iterator-init: the expensive recognizer
-    is built there, SURVEY.md F1) and returns ``value(decoded)``;
+    runs once per task, not per Python worker (iterator-init: the costly
+    recognizer is built there, SURVEY.md F1), returning ``value(decoded)``;
     ``emit(row, value)`` maps the row and its value (or ``QUARANTINED``)
     to 0..n output tuples in ``schema`` order.
 
@@ -185,7 +185,7 @@ def with_payload(df: DataFrame, key: str, resolve: Callable) -> DataFrame:
     ``content`` would arrive as a column of the table or via a binaryFile
     scan, with identical downstream plumbing. Not memoized (``key=None``):
     the value is the payload bytes themselves, and a memo would hold up to
-    the cap's worth of them per worker."""
+    the cap's worth of them per task."""
     schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema] + ["content binary"]
     )

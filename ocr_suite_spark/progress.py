@@ -190,6 +190,8 @@ def _run_groups(
         done = store.done_buckets(run_id)
         group = docs.where(F.pmod(F.col("bucket"), F.lit(bucket_groups)) == g)
         pending = group.join(done, "bucket", "left_anti")
+        if pending.isEmpty():
+            continue  # group fully done already (resume) or empty
 
         t0 = time.time()
         snap0 = meter.snapshot()
@@ -224,7 +226,7 @@ def _run_groups(
             .collect()
         )
         if not stats:
-            continue  # group fully done already (resume) or empty
+            continue  # pending docs were all zero-span: no output rows
         now = __import__("datetime").datetime.now(__import__("datetime").timezone.utc).replace(tzinfo=None)
         snap1 = meter.snapshot()
         total_docs = sum(r["n_docs"] for r in stats) or 1

@@ -56,7 +56,7 @@ def _ink_meta(img: np.ndarray) -> tuple:
 def media_decode_meta(spark: SparkSession, sf: str) -> DataFrame:
     """Decode each media payload and emit typed metadata
     (width, height, n_bytes, ink_fraction at the Otsu threshold); memoized
-    per worker on media_ref like the OCR path."""
+    per task on media_ref like the OCR path."""
     return map_media(
         _media_bytes(spark, sf),
         "doc_id string, offset int, width int, height int, n_bytes int, ink_frac double",

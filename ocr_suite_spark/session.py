@@ -16,9 +16,9 @@ from pyspark.sql import SparkSession
 
 def default_cores() -> int:
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return len(os.sched_getaffinity(0))
 
 
 def get_spark(

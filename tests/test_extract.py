@@ -232,10 +232,25 @@ def test_quarantine_mode_words(spark):
         X.extract_words(docs).collect()
 
 
+def test_salt_partitions_follow_real_media_count(spark, tmp_path):
+    """The OCR stage is sized from the slice's real media-span count. A
+    filtered slice of a bigger materialized corpus is the case Catalyst's
+    sizeInBytes estimate gets wrong: it ignores the filter, so it sees the
+    whole corpus (~20 tasks' worth here) where the slice holds under one."""
+    corpus = datagen.materialized_corpus(spark, "", cache_root=str(tmp_path), n_synth=4000)
+    media = X.explode_media_meta(corpus.where(F.col("doc_id").isin([f"doc-{i}" for i in range(100)])))
+    rows = media.count()
+    cores = spark.sparkContext.defaultParallelism
+    assert rows > 0
+    want = int(min(max(rows / 512, 1.5 * cores), 10 * cores))
+    assert X._salted(media, None).rdd.getNumPartitions() == want
+    assert X._salted(media, 5).rdd.getNumPartitions() == 5
+
+
 def test_extract_edge_inputs(spark):
     """Empty input, text-only docs, media-only docs — the routed union must
-    handle an empty branch on either side (and the stats-sized salt
-    partitioning must not choke on zero-row estimates)."""
+    handle an empty branch on either side (and the count-sized salt
+    partitioning must not choke on zero rows)."""
     from ocr_suite_spark.schema import DOCUMENTS
 
     empty = spark.createDataFrame([], DOCUMENTS)

@@ -28,7 +28,7 @@ def _sequences(df):
     }
 
 
-def test_full_run_then_noop_resume(spark, sf_dir, tmpdirs):
+def test_full_run_then_noop_resume(spark, sf_dir, tmpdirs, monkeypatch):
     out_dir, ckpt_dir = tmpdirs
     docs = datagen.interleaved_from_documents(spark, sf_dir).limit(120).cache()
     res1 = extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=8)
@@ -39,7 +39,12 @@ def test_full_run_then_noop_resume(spark, sf_dir, tmpdirs):
     n_done = store.done_buckets("run-1").count()
     assert n_done == 8
 
-    # second run: everything done -> no new progress rows, identical output
+    # second run: everything done -> no extraction at all, no new progress
+    # rows, identical output
+    def no_extract(*args, **kwargs):
+        raise AssertionError("a fully-done resume must not call extract()")
+
+    monkeypatch.setattr("ocr_suite_spark.operators.extract.extract", no_extract)
     res2 = extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=8)
     assert _sequences(res2) == seq1
     assert store.read().where(F.col("status") == "done").count() == n_done
