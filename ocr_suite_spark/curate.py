@@ -51,18 +51,16 @@ def survivor_stages(
     decon_min_shared: int = DECON_MIN_SHARED,
     max_top_tok: float = MAX_TOP_TOK_FRAC,
     max_dup_bigram: float = MAX_DUP_BIGRAM_FRAC,
-    checkpoint: bool = True,
 ) -> list[tuple[str, DataFrame]]:
     """The doc-level funnel as an ordered (stage name, survivor relation)
     list — shared by `curate` (which counts/writes each boundary) and the
     driver-graded `curate_funnel_stages` query (which grades the counts).
 
-    With checkpoint=True each boundary is materialized once
-    (localCheckpoint): every stage feeds at least two consumers — the next
-    stage and a count/aggregate — and Spark shares no common subplans, so
-    the funnel would otherwise re-execute the whole upstream chain per
-    consumer; same discipline as decontaminate / dedup_clusters use
-    internally.
+    Each boundary is materialized once (localCheckpoint): every stage
+    feeds at least two consumers — the next stage and a count/aggregate —
+    and Spark shares no common subplans, so the funnel would otherwise
+    re-execute the whole upstream chain per consumer; same discipline as
+    decontaminate / dedup_clusters use internally.
 
     r5 (VERDICT r4 ask #8 — trim the audit wall): the five stage FILTER
     relations (dedup keepers, contaminated set, repetition/Gopher
@@ -89,8 +87,7 @@ def survivor_stages(
     ]
 
     def push(name: str, df: DataFrame) -> DataFrame:
-        if checkpoint:
-            df = df.localCheckpoint(eager=True)
+        df = df.localCheckpoint(eager=True)
         stages.append((name, df))
         return df
 
@@ -118,8 +115,6 @@ def survivor_stages(
             # 5. deterministic mixture members
             "mixed": lambda: sample_mixture(spark, sf).select("doc_id"),
         }
-        if not checkpoint:
-            return {k: th() for k, th in thunks.items()}
         from concurrent.futures import ThreadPoolExecutor
 
         docs.cache()
@@ -179,9 +174,7 @@ def curate(
     source) and `<out_dir>/packed` (source, bin_id, n_docs, n_chars,
     first_doc) as managed tables via tableio.
     """
-    chain = survivor_stages(
-        spark, sf, decon_min_shared, max_top_tok, max_dup_bigram, checkpoint=True
-    )
+    chain = survivor_stages(spark, sf, decon_min_shared, max_top_tok, max_dup_bigram)
     stages: dict[str, int] = {name: df.count() for name, df in chain}
     survivors = chain[-1][1]
 

@@ -155,9 +155,9 @@ def materialized_corpus(
         # Fixed file count, independent of the WRITER session's parallelism:
         # a corpus written by a local[6] session would otherwise carry only
         # 6 small files and cap the scan/explode stages of every LATER
-        # reader at parallelism 6 — the scaling bench's 4N level must not
-        # inherit the N level's layout. (At real scale the table arrives
-        # pre-partitioned by the ingest job.)
+        # reader at parallelism 6 — a wider reader must not inherit the
+        # writer's layout. (At real scale the table arrives pre-partitioned
+        # by the ingest job.)
         tableio.write_table(df.repartition(64), path, mode="overwrite")
     return tableio.read_table(spark, path)
 
@@ -168,10 +168,10 @@ def synthesize(
     """Standalone deterministic corpus of n_docs documents.
 
     ``start`` offsets the doc-id range: slices with different starts share
-    the content *distribution* but no individual media_ref — used by the
-    scaling bench so repeated runs never re-see an image (at production
-    scale every image is seen once; per-worker memo hits across repeated
-    identical micro-bench runs would otherwise inflate small-N throughput).
+    the content *distribution* but no individual media_ref, so repeated
+    runs never re-see an image (at production scale every image is seen
+    once; memo hits across repeated identical runs would otherwise inflate
+    throughput).
     """
     base = spark.range(start, start + n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
     doc_id = F.concat(F.lit("doc-"), F.col("id").cast("string"))

@@ -139,7 +139,7 @@ def _emit_words(row, words) -> list[tuple]:
     return [(row.doc_id, row.offset, row.media_ref, *w) for w in words]
 
 
-def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
+def _salted(media: DataFrame) -> DataFrame:
     """Explicit skew defense: spread media spans of hot documents across
     partitions by salting on (doc_id, offset) before the expensive UDF.
 
@@ -167,17 +167,14 @@ def _salted(media: DataFrame, salt_partitions: int | None) -> DataFrame:
     is NOT used on purpose: it targets partition bytes, and these rows are
     bytes-tiny but compute-heavy.
     """
-    n = salt_partitions
-    if not n:
-        cores = media.sparkSession.sparkContext.defaultParallelism
-        n = int(min(max(media.count() / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
+    cores = media.sparkSession.sparkContext.defaultParallelism
+    n = int(min(max(media.count() / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
     salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n * 4))
     return media.repartition(n, salt)
 
 
 def extract_flat(
     documents: DataFrame,
-    salt_partitions: int | None = None,
     meter=None,
     on_error: str = "fail",
 ) -> DataFrame:
@@ -196,7 +193,7 @@ def extract_flat(
     )
     media_in = explode_media_meta(documents)  # pruned scan: no text field
     media_out = map_media(
-        _salted(media_in, salt_partitions), _FLAT_SCHEMA, _decode_ref,
+        _salted(media_in), _FLAT_SCHEMA, _decode_ref,
         _recognizer(_span_text), _emit_text, meter=meter, on_error=on_error,
     )
     return text_out.unionByName(media_out)
@@ -227,19 +224,15 @@ def merge_spans(flat: DataFrame) -> DataFrame:
 
 def extract(
     documents: DataFrame,
-    salt_partitions: int | None = None,
     meter=None,
     on_error: str = "fail",
 ) -> DataFrame:
     """Full pipeline: documents -> merged (kind, text, media_ref, order) sequences."""
-    return merge_spans(
-        extract_flat(documents, salt_partitions, meter=meter, on_error=on_error)
-    )
+    return merge_spans(extract_flat(documents, meter=meter, on_error=on_error))
 
 
 def extract_words(
     documents: DataFrame,
-    salt_partitions: int | None = None,
     meter=None,
     on_error: str = "fail",
 ) -> DataFrame:
@@ -247,6 +240,6 @@ def extract_words(
     under on_error='quarantine' a corrupt payload drops that span's words."""
     media_in = explode_media_meta(documents)  # pruned scan: no text field
     return map_media(
-        _salted(media_in, salt_partitions), _WORDS_SCHEMA, _decode_ref,
+        _salted(media_in), _WORDS_SCHEMA, _decode_ref,
         _recognizer(_word_tuples), _emit_words, meter=meter, on_error=on_error,
     )

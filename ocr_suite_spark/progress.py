@@ -97,7 +97,6 @@ def extract_resumable(
     ckpt_dir: str,
     run_id: str = "run-1",
     n_buckets: int = 32,
-    salt_partitions: int | None = None,
     meter=None,
     on_error: str = "fail",
     bucket_groups: int = 1,
@@ -129,7 +128,6 @@ def extract_resumable(
     """
     from .lock import SingleInstanceLock
     from .metrics import SpeedMeter
-    from .operators import extract as X
 
     store = ProgressStore(spark, ckpt_dir)
     docs = documents.withColumn("bucket", bucket_col(n_buckets))
@@ -141,7 +139,7 @@ def extract_resumable(
     # single-instance semantics incl. stale-lock takeover, lock.py)
     with SingleInstanceLock(ckpt_dir):
         _run_groups(
-            spark, store, docs, out_dir, run_id, n_buckets, salt_partitions,
+            spark, store, docs, out_dir, run_id, n_buckets,
             meter, on_error, bucket_groups, stop_requested,
         )
     # The final read must survive a graceful stop that fired before group 0
@@ -177,7 +175,7 @@ def extract_resumable(
 
 
 def _run_groups(
-    spark, store, docs, out_dir, run_id, n_buckets, salt_partitions,
+    spark, store, docs, out_dir, run_id, n_buckets,
     meter, on_error, bucket_groups, stop_requested=None,
 ) -> None:
     from .operators import extract as X
@@ -195,12 +193,7 @@ def _run_groups(
 
         t0 = time.time()
         snap0 = meter.snapshot()
-        merged = X.extract(
-            pending.drop("bucket"),
-            salt_partitions=salt_partitions,
-            meter=meter,
-            on_error=on_error,
-        )
+        merged = X.extract(pending.drop("bucket"), meter=meter, on_error=on_error)
         result = merged.withColumn("bucket", bucket_col(n_buckets))
         tableio.write_table(result, out_dir, mode="overwrite", partition_by=["bucket"])
         wall = time.time() - t0

@@ -728,11 +728,13 @@ FROM c JOIN k USING (canon_url)
 # (gap <= K), Lee et al.'s span union at K-bounded resolution — the
 # standard distributed trade for the suffix array, disclosed.
 #
-# Scale: one posexplode + one doc_id window build the gram stream (the
-# tokenizer runs ONCE per doc — shingle_rows pattern; never inline a
-# derived array into a lambda); the duplicate test is a map-side-combined
-# COUNT on md5(gram) with the join back co-partitioned on the same key;
-# span merging is doc_id-local. Never all-pairs, no driver action.
+# Scale: a posexplode + a doc_id window build the gram stream. The
+# executed plan (sf0.01, local[4]) holds TWO posexplode nodes, so the
+# tokenizer runs twice per doc: the per-doc n_grams count and the dup
+# join share one doc_id exchange (ReusedExchange), while the COUNT on gh
+# (the duplicate test, map-side combined) builds its own. The join back
+# to the duplicate set is keyed on gh; span merging is doc_id-local.
+# Never all-pairs, no driver action.
 
 SUBSTR_K = 8
 

@@ -195,8 +195,9 @@ def test_quarantine_mode_survives_corrupt_media(spark):
 
 def test_quarantine_mode_words(spark):
     """extract_words twin of the quarantine test: a corrupt payload drops
-    that span's word rows (counted once per distinct ref on n_errors, not
-    per occurrence) while healthy spans keep theirs; default still fails."""
+    that span's word rows (counted on n_errors once per distinct ref in
+    each OCR task, not per occurrence) while healthy spans keep theirs;
+    default still fails."""
     from ocr_suite_spark.kernels.render import make_media_ref
     from ocr_suite_spark.metrics import SpeedMeter
     from ocr_suite_spark.schema import DOCUMENTS
@@ -207,27 +208,33 @@ def test_quarantine_mode_words(spark):
             ("ok1", [{"kind": "media", "text": None, "media_ref": make_media_ref(["alpha"], 0, 1), "offset": 1}]),
             # same corrupt ref twice in ONE doc: memoized sentinel must make
             # the second occurrence free (no second decode attempt/count on
-            # the worker that owns it)
+            # the worker that owns it). Offsets 1 and 4 salt into the same
+            # OCR task on the suite's local[8] session.
             ("bad", [
                 {"kind": "media", "text": None, "media_ref": bad_ref, "offset": 1},
-                {"kind": "media", "text": None, "media_ref": bad_ref, "offset": 2},
+                {"kind": "media", "text": None, "media_ref": bad_ref, "offset": 4},
             ]),
         ],
         DOCUMENTS,
     )
     meter = SpeedMeter(spark)
-    # salt_partitions=1: both occurrences land on one worker, so the
-    # distinct-payload error count is exactly 1 (cross-worker repeats
-    # legitimately count once per worker)
-    rows = X.extract_words(
-        docs, salt_partitions=1, on_error="quarantine", meter=meter
-    ).collect()
+    rows = X.extract_words(docs, on_error="quarantine", meter=meter).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r["word"])
     assert by_doc.get("ok1") == ["alpha"]
     assert "bad" not in by_doc  # quarantined span yields no word rows
-    assert meter.n_errors.value == 1
+    # the memo counts a corrupt ref once per task: occurrences salted into
+    # the same OCR task count once, a repeat in another task counts again
+    bad_tasks = (
+        X._salted(X.explode_media_meta(docs))
+        .where(F.col("media_ref") == bad_ref)
+        .select(F.spark_partition_id())
+        .distinct()
+        .count()
+    )
+    assert bad_tasks == 1, "both occurrences must share a task to exercise the memo"
+    assert meter.n_errors.value == bad_tasks
     with pytest.raises(Exception, match="unrecognized media_ref"):
         X.extract_words(docs).collect()
 
@@ -243,8 +250,7 @@ def test_salt_partitions_follow_real_media_count(spark, tmp_path):
     cores = spark.sparkContext.defaultParallelism
     assert rows > 0
     want = int(min(max(rows / 512, 1.5 * cores), 10 * cores))
-    assert X._salted(media, None).rdd.getNumPartitions() == want
-    assert X._salted(media, 5).rdd.getNumPartitions() == 5
+    assert X._salted(media).rdd.getNumPartitions() == want
 
 
 def test_extract_edge_inputs(spark):
