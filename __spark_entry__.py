@@ -18,9 +18,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full OCR-extraction pipeline over the interleaved
     text+media corpus derived deterministically from sf0.001 documents.
 
-    documents -> explode spans -> route by kind -> (normalizer || salted
-    mapInPandas OCR) -> union -> merge by offset into per-doc
-    (kind, text, media_ref, order) sequences.
+    documents -> explode spans -> route by kind -> (normalizer ||
+    media_ref-partitioned mapInPandas OCR) -> union -> merge by offset into
+    per-doc (kind, text, media_ref, order) sequences.
     """
     from ocr_suite_spark import datagen
     from ocr_suite_spark.operators import extract as X

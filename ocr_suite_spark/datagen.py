@@ -15,7 +15,8 @@ Skew is built in on purpose: a small fraction of documents are "media-heavy"
 (a media span after every chunk, with more words per image). This mirrors
 the large-video skew the reference balances with LPT assignment
 (/root/reference src/viewer/search.cpp:117-163); the pipeline handles it
-with explicit salting + AQE instead.
+by hash-partitioning media spans on media_ref (spans of one document
+carry distinct refs, so a heavy document spreads) + AQE instead.
 """
 
 from __future__ import annotations

@@ -5,15 +5,15 @@ decode frames -> bounded queue -> OCR threads -> per-frame store, i.e.
 
     documents --explode--> spans --route by kind-->
         text path  : boilerplate-strip normalizer (pure Column exprs)
-        media path : salt -> repartition -> mapInPandas OCR (Arrow batches,
-                     per-task recognizer init = reference's per-thread
-                     Tesseract instance, main.cpp:136-177)
+        media path : repartition on media_ref -> mapInPandas OCR (Arrow
+                     batches, per-task recognizer init = reference's
+                     per-thread Tesseract instance, main.cpp:136-177)
     --union--> flat extracted spans --groupBy(doc_id) + sort by offset-->
     merged (kind, text, media_ref, order) sequences.
 
 Scale notes:
-- The only shuffles are the explicit media-path salt repartition (skew
-  defense; reference analog: LPT balancing, search.cpp:117-163) and the
+- The only shuffles are the explicit media-path repartition on media_ref
+  (even tasks; reference analog: LPT balancing, search.cpp:117-163) and the
   final groupBy(doc_id) merge. Catalyst cannot push filters through
   mapInPandas, so the kind=='media' filter is authored *upstream* of the UDF.
 - No per-row Python UDFs; the recognizer runs per Arrow batch with numpy
@@ -21,6 +21,8 @@ Scale notes:
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,8 +33,9 @@ from ..kernels.ocr import Recognizer
 from .memo import QUARANTINED, map_media
 
 _FLAT_SCHEMA = "doc_id string, order int, kind string, text string, media_ref string"
-# salt-partition sizing: ~512 media spans (~2 s of OCR) per task
-_TARGET_ROWS_PER_TASK = 512
+# OCR-stage sizing: at most this many media spans per task (SCALE.md
+# "Task sizing")
+_TARGET_ROWS_PER_TASK = 1024
 _WORDS_SCHEMA = (
     "doc_id string, order int, media_ref string, word string, "
     "left int, top int, right int, bottom int, confidence float"
@@ -140,37 +143,32 @@ def _emit_words(row, words) -> list[tuple]:
 
 
 def _salted(media: DataFrame) -> DataFrame:
-    """Explicit skew defense: spread media spans of hot documents across
-    partitions by salting on (doc_id, offset) before the expensive UDF.
+    """Place media spans for the OCR stage: hash-partition on ``media_ref``
+    into one even wave (or a few) of tasks.
 
-    A media-heavy document (many spans, big images) otherwise pins one
-    partition — the 100TB analog of the reference's largest-video problem
-    (which it LPT-balances by file size, search.cpp:117-163).
-
-    One shuffle; uniform salting over fine-grained partitions makes every
-    partition the same expected cost mix (heavy images per partition
-    concentrate tightly at this granularity — a ~Poisson count, i.e. a
-    few-percent task-cost variance the scheduler absorbs across waves).
-    An earlier two-branch variant that repartitioned the heavy and light
-    cost classes separately measured the same in-stage utilization
-    (event-log: 96-98% at 24 slots) but paid its two exchanges as
-    *sequential* jobs under AQE — strictly worse.
-
-    Partition count is sized from the DATA, not from the cluster: an exact
-    media.count() (a JVM-only job; Catalyst's sizeInBytes ignores filter
-    selectivity) at ~512 spans per task. No output value depends on it.
-    Each mapInPandas task pays a fixed ~0.3 core-s (measured, 4-vCPU
-    host), so a cores-sized count over-decomposes small inputs. Clamped to
-    [1.5x, 10x] parallelism so tasks stay wave-schedulable: at
-    sf0.1/local[32], 64 tasks measured median 3.36 s vs 48 tasks 2.72 s
-    (near-uniform salted task costs need no extra wave). AQE coalescing
-    is NOT used on purpose: it targets partition bytes, and these rows are
-    bytes-tiny but compute-heavy.
+    - **Key.** Hashing the raw ref spreads distinct images evenly: on the
+      four 1,200-doc ``extract_unique`` slices of seed 802 (4 cores) the
+      4 tasks held 757-849 rows, at most 1.05x the mean. It also puts every
+      copy of an image in one task, so the per-task ``RefMemo`` computes
+      each distinct image once per call. The former salt hashed
+      ``(doc_id, offset)`` into 4n integers that ``repartition`` re-hashed
+      into n partitions: a lumpy split (6 tasks of 124-850 rows on the same
+      slices, the largest 1.45-1.56x the mean) that also scattered repeated
+      images over tasks.
+    - **Skew.** A hot document still spreads, because its spans carry
+      distinct refs. A hot ref costs one compute plus ~2.5 us per repeat to
+      emit (SCALE.md "Skew").
+    - **Count.** Sized from the DATA in whole waves of the cluster's cores:
+      ``waves = ceil(rows / (cores * _TARGET_ROWS_PER_TASK))`` from an exact
+      ``media.count()`` (a JVM-only job; Catalyst's sizeInBytes ignores
+      filter selectivity). A partial last wave would leave slots idle while
+      the slowest task finishes. No output value depends on the count.
+      AQE coalescing is NOT used on purpose: it targets partition bytes, and
+      these rows are bytes-tiny but compute-heavy.
     """
     cores = media.sparkSession.sparkContext.defaultParallelism
-    n = int(min(max(media.count() / _TARGET_ROWS_PER_TASK, 1.5 * cores), 10 * cores))
-    salt = F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n * 4))
-    return media.repartition(n, salt)
+    waves = max(1, math.ceil(media.count() / (cores * _TARGET_ROWS_PER_TASK)))
+    return media.repartition(waves * cores, "media_ref")
 
 
 def extract_flat(

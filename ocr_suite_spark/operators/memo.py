@@ -24,6 +24,12 @@ ocr_s apart. The loop owns the rest:
   ``on_error='quarantine'`` a corrupt payload is attempted once, memoized
   as ``QUARANTINED`` for the emitter, and every later row with the same key
   costs nothing.
+
+The OCR stage (operators/extract.py) partitions its input on
+``media_ref``, so within one call every copy of a ref shares a task: each
+distinct image is computed once per call, and ``n_errors`` counts distinct
+bad refs per call. Elsewhere the caller's partitioning decides how many
+tasks see a key.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@
 Computes the exact same (kind, text, media_ref, order) sequences as
 operators/extract.py, but single-threaded in pandas using the shared
 kernels. Tests compare Spark output against this row-for-row — proving the
-distributed plumbing (explode, routing, salting, Arrow batching, union,
+distributed plumbing (explode, routing, partitioning, Arrow batching, union,
 merge) preserves the reference semantics.
 """
 

@@ -36,6 +36,8 @@ def get_spark(
     - Arrow enabled and batch-bounded: the analog of the reference's
       2x-threads bounded frame queue (main.cpp:57) — bounds UDF memory.
     - UTC session timezone: required for DuckDB-oracle comparability.
+    - Python workers come from ``ocr_suite_spark.daemon``, which stops each
+      task from re-reading the unchanging pyspark/py4j zips.
     """
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
@@ -64,6 +66,8 @@ def get_spark(
         .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # per-task zip re-read off the Python worker's fixed cost (daemon.py)
+        .config("spark.python.daemon.module", "ocr_suite_spark.daemon")
     )
     for k, v in malloc_env.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)

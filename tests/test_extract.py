@@ -6,10 +6,14 @@ The BASELINE.json per-row invariant: span-sequence equality
 
 from __future__ import annotations
 
+import math
+
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ocr_suite_spark import datagen
+from ocr_suite_spark.kernels.ocr import Recognizer
 from ocr_suite_spark.operators import extract as X
 from ocr_suite_spark.oracle import extract_pandas
 
@@ -53,7 +57,7 @@ def test_datagen_deterministic(spark, sf_dir, docs):
 
 
 def test_flagship_matches_pandas_oracle(spark, docs):
-    # Spark pipeline (8 threads, salted, Arrow-batched)
+    # Spark pipeline (8 threads, partitioned on media_ref, Arrow-batched)
     got = _spark_sequences(X.extract(docs))
     # pure-pandas oracle on the same input
     want = extract_pandas(docs.toPandas())
@@ -196,24 +200,22 @@ def test_quarantine_mode_survives_corrupt_media(spark):
 def test_quarantine_mode_words(spark):
     """extract_words twin of the quarantine test: a corrupt payload drops
     that span's word rows (counted on n_errors once per distinct ref in
-    each OCR task, not per occurrence) while healthy spans keep theirs;
+    the call, not per occurrence) while healthy spans keep theirs;
     default still fails."""
     from ocr_suite_spark.kernels.render import make_media_ref
     from ocr_suite_spark.metrics import SpeedMeter
     from ocr_suite_spark.schema import DOCUMENTS
 
     bad_ref = "img://v1/NOT_A_VALID_REF"
+    bad = lambda offset: {"kind": "media", "text": None, "media_ref": bad_ref, "offset": offset}
     docs = spark.createDataFrame(
         [
             ("ok1", [{"kind": "media", "text": None, "media_ref": make_media_ref(["alpha"], 0, 1), "offset": 1}]),
-            # same corrupt ref twice in ONE doc: memoized sentinel must make
-            # the second occurrence free (no second decode attempt/count on
-            # the worker that owns it). Offsets 1 and 4 salt into the same
-            # OCR task on the suite's local[8] session.
-            ("bad", [
-                {"kind": "media", "text": None, "media_ref": bad_ref, "offset": 1},
-                {"kind": "media", "text": None, "media_ref": bad_ref, "offset": 4},
-            ]),
+            # the same corrupt ref in two docs: the OCR stage partitions on
+            # media_ref, so both copies share a task and the memoized
+            # sentinel makes the second one free (no second decode/count)
+            ("bad", [bad(1)]),
+            ("bad2", [bad(4)]),
         ],
         DOCUMENTS,
     )
@@ -222,40 +224,68 @@ def test_quarantine_mode_words(spark):
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r["word"])
-    assert by_doc.get("ok1") == ["alpha"]
-    assert "bad" not in by_doc  # quarantined span yields no word rows
-    # the memo counts a corrupt ref once per task: occurrences salted into
-    # the same OCR task count once, a repeat in another task counts again
-    bad_tasks = (
-        X._salted(X.explode_media_meta(docs))
-        .where(F.col("media_ref") == bad_ref)
-        .select(F.spark_partition_id())
-        .distinct()
-        .count()
-    )
-    assert bad_tasks == 1, "both occurrences must share a task to exercise the memo"
-    assert meter.n_errors.value == bad_tasks
+    assert by_doc == {"ok1": ["alpha"]}  # quarantined spans yield no word rows
+    assert meter.n_errors.value == 1
     with pytest.raises(Exception, match="unrecognized media_ref"):
         X.extract_words(docs).collect()
 
 
+def test_repeated_images_computed_once_per_call(spark):
+    """Every copy of an image lands in one OCR task, so one extract() call
+    recognizes each distinct ref once, however many docs repeat it."""
+    from ocr_suite_spark.kernels.render import make_media_ref
+    from ocr_suite_spark.metrics import SpeedMeter
+    from ocr_suite_spark.schema import DOCUMENTS
+
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot"]
+    refs = [make_media_ref([w], 0, 1) for w in words]
+    span = lambda ref, offset: {"kind": "media", "text": None, "media_ref": ref, "offset": offset}
+    # 24 docs; each ref recurs in 8 different docs at varying offsets
+    docs = spark.createDataFrame(
+        [
+            (f"d{i}", [span(refs[i % len(refs)], 0), span(refs[(i + 1) % len(refs)], 2 + i % 5)])
+            for i in range(24)
+        ],
+        DOCUMENTS,
+    )
+    meter = SpeedMeter(spark)
+    got = _spark_sequences(X.extract(docs, meter=meter))
+    assert meter.n_images.value == len(refs)
+    text = {ref: X._span_text(Recognizer().recognize(X._decode_ref(Row(media_ref=ref)))) for ref in refs}
+    assert sorted(text.values()) == sorted(words)
+    for i in range(24):
+        a, b = refs[i % len(refs)], refs[(i + 1) % len(refs)]
+        assert got[f"d{i}"] == [("media", text[a], a, 0), ("media", text[b], b, 2 + i % 5)]
+
+
 def test_salt_partitions_follow_real_media_count(spark, tmp_path):
-    """The OCR stage is sized from the slice's real media-span count. A
-    filtered slice of a bigger materialized corpus is the case Catalyst's
-    sizeInBytes estimate gets wrong: it ignores the filter, so it sees the
-    whole corpus (~20 tasks' worth here) where the slice holds under one."""
+    """The OCR stage is sized from the slice's real media-span count, in
+    whole waves of the session's cores. A filtered slice of a bigger
+    materialized corpus is the case Catalyst's sizeInBytes estimate gets
+    wrong: it ignores the filter, so it sees the whole corpus where the
+    slice holds under one wave. On the whole corpus the media_ref hash
+    fills the tasks evenly."""
     corpus = datagen.materialized_corpus(spark, "", cache_root=str(tmp_path), n_synth=4000)
     media = X.explode_media_meta(corpus.where(F.col("doc_id").isin([f"doc-{i}" for i in range(100)])))
     rows = media.count()
     cores = spark.sparkContext.defaultParallelism
+    T = X._TARGET_ROWS_PER_TASK
     assert rows > 0
-    want = int(min(max(rows / 512, 1.5 * cores), 10 * cores))
-    assert X._salted(media).rdd.getNumPartitions() == want
+    assert X._salted(media).rdd.getNumPartitions() == cores * math.ceil(rows / (cores * T))
+
+    per_task = [
+        r["count"]
+        for r in X._salted(X.explode_media_meta(corpus))
+        .groupBy(F.spark_partition_id().alias("p"))
+        .count()
+        .collect()
+    ]
+    assert max(per_task) <= 1.25 * sum(per_task) / len(per_task), sorted(per_task)
 
 
 def test_extract_edge_inputs(spark):
     """Empty input, text-only docs, media-only docs — the routed union must
-    handle an empty branch on either side (and the count-sized salt
+    handle an empty branch on either side (and the count-sized OCR
     partitioning must not choke on zero rows)."""
     from ocr_suite_spark.schema import DOCUMENTS
 
