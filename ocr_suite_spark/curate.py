@@ -117,11 +117,18 @@ def survivor_stages(
         }
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         docs.cache()
         try:
+            # pool threads do not inherit the caller's local properties
+            # (job group, scheduler pool) or job tags: wrap each target so
+            # its jobs stay attributable to, and cancellable with, the
+            # caller's job group
+            inherit = inheritable_thread_target(spark)
             with ThreadPoolExecutor(len(thunks)) as ex:
                 futs = {
-                    k: ex.submit(lambda th=th: th().localCheckpoint(eager=True))
+                    k: ex.submit(inherit(lambda th=th: th().localCheckpoint(eager=True)))
                     for k, th in thunks.items()
                 }
                 return {k: f.result() for k, f in futs.items()}

@@ -8,10 +8,17 @@ confidence (tesseract.cpp:102-106), deterministic output as a pure function
 of pixel content. Expensive state (the template bank) is built once per
 ``Recognizer`` instance — once per task in the Spark UDF, mirroring the
 reference's per-thread Tesseract instance (main.cpp:136-177).
+
+Per image, single thread (4-vCPU Xeon VM, 1,500 seeded refs),
+``recognize`` costs 1.00-1.08 ms: Otsu 0.13, ink coordinates + skew
+search 0.35-0.38, segmentation + matching 0.52-0.57. Speed-ups must keep
+every output byte (test_kernels.test_kernel_outputs_frozen); SCALE.md
+"Kernel cost per image" lists the cuts measured and rejected.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import numpy as np
@@ -71,6 +78,12 @@ def binarize(img: np.ndarray) -> np.ndarray:
     return img <= otsu_threshold(img)
 
 
+def ink_coords(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``np.nonzero(mask)`` for a 2-D mask (same arrays), ~2.4x cheaper:
+    one flat scan, then a divmod by the row width."""
+    return np.divmod(np.flatnonzero(mask), mask.shape[1])
+
+
 def estimate_skew(
     mask: np.ndarray,
     candidates: tuple[int, ...] = SKEW_SET,
@@ -95,7 +108,7 @@ def estimate_skew(
     ink size — and was dropped; see BENCH.md r5).
     """
     h, w = mask.shape
-    ys, xs = ink if ink is not None else np.nonzero(mask)
+    ys, xs = ink if ink is not None else ink_coords(mask)
     if ys.size == 0:
         return 0
     if ys.size > 2048:
@@ -103,43 +116,55 @@ def estimate_skew(
         ys = ys[::step]
         xs = xs[::step]
     cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
-    xr = xs - cx
-    yr = ys - cy
     # All candidate rotations in ONE batch: dest rows as a (n_angles, n_ink)
     # matrix, out-of-range pixels routed to a per-angle trash bin (row h,
     # sliced off — same exclusion as the old per-angle filter), then a
     # single offset-encoded bincount yields every profile at once. Counts,
     # variances and the argmax are bit-identical to the per-angle loop
     # (test_estimate_skew_exact + the skew/letter roundtrip sweeps).
-    rad = np.deg2rad(np.asarray(candidates, dtype=np.float64))
-    yd = np.rint(
-        np.outer(-np.sin(rad), xr) + np.outer(np.cos(rad), yr) + cy
-    ).astype(np.int64)
-    yd[(yd < 0) | (yd >= h)] = h  # trash bin
+    nsin, cos, rows, pref = _skew_plan(tuple(candidates))
+    t = nsin * (xs - cx)  # == np.outer(-sin, xr), elementwise the same
+    t += cos * (ys - cy)
+    t += cy
+    yd = np.rint(t).astype(np.int64)
+    # trash bin: negatives wrap to huge on the unsigned view, so one
+    # minimum routes both out-of-range sides to row h
+    ydu = yd.view(np.uint64)
+    np.minimum(ydu, np.uint64(h), out=ydu)
     hh = h + 1
-    offs = (np.arange(len(candidates)) * hh)[:, None]
+    yd += rows * hh
     prof = (
-        np.bincount((yd + offs).ravel(), minlength=len(candidates) * hh)
+        np.bincount(yd.ravel(), minlength=len(candidates) * hh)
         .reshape(len(candidates), hh)[:, :h]
         .astype(np.float64)
     )
-    scores = prof.var(axis=1)
-    best = max(
-        range(len(candidates)),
-        key=lambda i: (scores[i], -abs(candidates[i]), -candidates[i]),
-    )
-    return int(candidates[best])
+    # prof.var(axis=1), in the operations numpy's _var performs, without
+    # its wrapper
+    mean = np.add.reduce(prof, axis=1, keepdims=True)
+    mean /= h
+    prof -= mean
+    prof *= prof
+    scores = np.add.reduce(prof, axis=1) / h
+    # the first maximum in preference order (smaller |angle|, then smaller)
+    return int(candidates[pref[int(np.argmax(scores[pref]))]])
+
+
+@functools.lru_cache(maxsize=8)
+def _skew_plan(candidates: tuple[int, ...]):
+    """Per candidate set: -sin and cos columns, row-offset multipliers and
+    the tie-break order of ``estimate_skew``."""
+    rad = np.deg2rad(np.asarray(candidates, dtype=np.float64))
+    pref = sorted(range(len(candidates)), key=lambda i: (abs(candidates[i]), candidates[i]))
+    return (-np.sin(rad))[:, None], np.cos(rad)[:, None], np.arange(len(candidates))[:, None], pref
 
 
 def _runs(flags: np.ndarray) -> list[tuple[int, int]]:
-    """Contiguous True runs as [start, end) index pairs."""
-    idx = np.flatnonzero(flags)
-    if idx.size == 0:
-        return []
-    splits = np.flatnonzero(np.diff(idx) > 1)
-    starts = np.concatenate(([idx[0]], idx[splits + 1]))
-    ends = np.concatenate((idx[splits] + 1, [idx[-1] + 1]))
-    return list(zip(starts.tolist(), ends.tolist()))
+    """Contiguous True runs as [start, end) index pairs: the edges of the
+    zero-padded flags alternate start, end."""
+    f = np.zeros(flags.size + 2, dtype=np.int8)
+    f[1:-1] = flags
+    e = np.flatnonzero(f[1:] != f[:-1]).tolist()
+    return list(zip(e[::2], e[1::2]))
 
 
 class Recognizer:
@@ -155,36 +180,27 @@ class Recognizer:
         self._tmpl = t / np.linalg.norm(t, axis=1, keepdims=True)
 
     def _match_chars(self, cells: np.ndarray) -> tuple[list[str], np.ndarray]:
-        """cells: (n, 7, 5) mean-ink grids -> (chars, cosine scores)."""
-        flat = cells.reshape(len(cells), -1).astype(np.float32)
-        norms = np.linalg.norm(flat, axis=1, keepdims=True)
+        """cells: (n, 7, 5) mean-ink grids -> (chars, each char's best
+        cosine score).
+
+        One matmul per word, on purpose: batching every char of an image
+        into one matmul changes float32 score bits (2,042 of 3,000 ref
+        images; same chars, but a confidence can round differently)."""
+        flat = cells.reshape(len(cells), -1)  # float32 already
+        # exactly what np.linalg.norm(flat, axis=1) computes, minus its
+        # dispatch overhead
+        norms = np.sqrt(np.add.reduce(flat * flat, axis=1, keepdims=True))
         norms[norms == 0] = 1.0
         scores = (flat / norms) @ self._tmpl.T  # (n, n_glyphs)
-        best = np.argmax(scores, axis=1)
-        return [ALPHABET[i] for i in best], scores[np.arange(len(best)), best]
-
-    @staticmethod
-    def _downsample(cell: np.ndarray) -> np.ndarray:
-        """Tight-crop a char cell and mean-pool it onto the 7x5 glyph grid.
-
-        Aspect-preserving: glyph cells are square, so the pixel-per-cell unit
-        comes from the crop *height* (all glyphs are full 7 rows tall); a
-        narrower glyph (e.g. 'i', 3 units wide) is centered in the 5-wide
-        grid instead of being stretched — stretching erases the width cue
-        that distinguishes 'i' from 't'.
-        """
-        ys = np.flatnonzero(cell.any(axis=1))
-        xs = np.flatnonzero(cell.any(axis=0))
-        if ys.size == 0 or xs.size == 0:
-            return np.zeros((GLYPH_H, GLYPH_W), dtype=np.float32)
-        c = cell[ys[0] : ys[-1] + 1, xs[0] : xs[-1] + 1].astype(np.float32)
-        return Recognizer._pool(c)
+        best = scores.argmax(axis=1)
+        return [ALPHABET[i] for i in best.tolist()], scores.max(axis=1)
 
     _POOL_BINS: dict[tuple[int, int], tuple] = {}
 
     @staticmethod
-    def _pool(c: np.ndarray) -> np.ndarray:
-        """Mean-pool a tight float32 crop onto the centered 7x5 glyph grid."""
+    def _pool(c: np.ndarray, out: np.ndarray | None = None) -> np.ndarray:
+        """Mean-pool a tight float32 crop onto the centered 7x5 glyph grid
+        (into ``out``, a zeroed 7x5 float32 array, when given)."""
         h, w = c.shape
         # bin boundaries depend only on the crop shape — char crops cluster
         # around the glyph size, so memoizing by (h, w) removes nearly all
@@ -198,17 +214,17 @@ class Recognizer:
             ycnt = np.maximum(np.diff(np.append(ystarts, h)), 1)
             xcnt = np.maximum(np.diff(np.append(xstarts, w)), 1)
             area = np.outer(ycnt, xcnt).astype(np.float32)
+            off = (GLYPH_W - gw) // 2
             if len(Recognizer._POOL_BINS) > 4096:
                 Recognizer._POOL_BINS.clear()
-            bins = Recognizer._POOL_BINS[(h, w)] = (gw, ystarts, xstarts, area)
-        gw, ystarts, xstarts, area = bins
+            bins = Recognizer._POOL_BINS[(h, w)] = (ystarts, xstarts, area, slice(off, off + gw))
+        ystarts, xstarts, area, cols = bins
         # mean-pool via reduceat on contiguous bin boundaries (bins are
         # monotone by construction, ~10x cheaper than scatter-add)
         pooled = np.add.reduceat(np.add.reduceat(c, ystarts, axis=0), xstarts, axis=1)
-        pooled /= area
-        out = np.zeros((GLYPH_H, GLYPH_W), dtype=np.float32)
-        off = (GLYPH_W - gw) // 2
-        out[:, off : off + gw] = pooled
+        if out is None:
+            out = np.zeros((GLYPH_H, GLYPH_W), dtype=np.float32)
+        np.divide(pooled, area, out=out[:, cols])
         return out
 
     @staticmethod
@@ -241,24 +257,30 @@ class Recognizer:
     def _downsample_cells(
         line: np.ndarray,
         grp: list[tuple[int, int]],
-        y01: tuple[np.ndarray, np.ndarray] | None = None,
+        y01: tuple[np.ndarray, np.ndarray],
     ) -> np.ndarray:
         """All char cells of one word at once (x-crop free: column runs
-        are maximal ink runs). y-extents come precomputed per line
-        (``_cell_y_extents``) or are derived here for standalone calls."""
-        y0s, y1s = y01 if y01 is not None else Recognizer._cell_y_extents(line, grp)
+        are maximal ink runs), y-extents precomputed per line
+        (``_cell_y_extents``). The word's columns become float32 in one
+        copy and each cell pools straight into its output slot (a per-cell
+        copy and a 7x5 temporary cost 26-55 of 155-215 us/img).
+
+        The loop over cells stays: pooling a whole line or image in one
+        vectorized pass is bit-identical but measured 10-25% slower on
+        recognize (1.12-1.28 -> 1.29-1.53 ms/img) — at ~15 cells per image
+        numpy's per-call overhead is the floor either way."""
+        a0 = grp[0][0]
+        word = line[:, a0 : grp[-1][1]].astype(np.float32)
         out = np.zeros((len(grp), GLYPH_H, GLYPH_W), dtype=np.float32)
-        for k, (a, b) in enumerate(grp):
-            out[k] = Recognizer._pool(
-                line[int(y0s[k]) : int(y1s[k]), a:b].astype(np.float32)
-            )
+        for k, (a, b), y0, y1 in zip(range(len(grp)), grp, y01[0].tolist(), y01[1].tolist()):
+            Recognizer._pool(word[y0:y1, a - a0 : b - a0], out[k])
         return out
 
     def recognize(self, img: np.ndarray) -> list[WordBox]:
         """Full pipeline on a grayscale image -> word boxes in reading order."""
         thresh, _mid = otsu_stats(img)
         mask = img <= thresh
-        ys, xs = np.nonzero(mask)  # computed once; shared with the skew search
+        ys, xs = ink_coords(mask)  # computed once; shared with the skew search
         if ys.size == 0:
             return []
         angle = estimate_skew(mask, ink=(ys, xs))
@@ -272,14 +294,20 @@ class Recognizer:
             # skew x wordcount x noise sweep plus the all-letters sweep.
             h, w = mask.shape
             a = np.deg2rad(angle)
+            cos_a, sin_a = np.cos(a), np.sin(a)
             cy, cx = (h - 1) / 2.0, (w - 1) / 2.0
             xr = xs - cx
             yr = ys - cy
-            xd = np.rint(np.cos(a) * xr + np.sin(a) * yr + cx).astype(np.int64)
-            yd = np.rint(-np.sin(a) * xr + np.cos(a) * yr + cy).astype(np.int64)
-            ok = (xd >= 0) & (xd < w) & (yd >= 0) & (yd < h)
+            xd = np.rint(cos_a * xr + sin_a * yr + cx).astype(np.int64)
+            yd = np.rint(-sin_a * xr + cos_a * yr + cy).astype(np.int64)
+            # in range <=> below the bound on the unsigned view (negatives
+            # wrap to huge); then scatter through flat indices
+            ok = xd.view(np.uint64) < w
+            ok &= yd.view(np.uint64) < h
+            yd *= w
+            yd += xd
             mask = np.zeros_like(mask)
-            mask[yd[ok], xd[ok]] = True
+            mask.ravel()[yd[ok]] = True
 
         words: list[WordBox] = []
         for y0, y1 in _runs(mask.any(axis=1)):  # text lines
@@ -302,7 +330,7 @@ class Recognizer:
                     (y0s[grp[0] : grp[-1] + 1], y1s[grp[0] : grp[-1] + 1]),
                 )
                 chars, scores = self._match_chars(cells)
-                conf = float(np.clip(scores.min(), 0.0, 1.0) * 100.0)
+                conf = min(max(float(scores.min()), 0.0), 1.0) * 100.0
                 words.append(
                     WordBox(
                         text="".join(chars),

@@ -15,12 +15,17 @@ The byte container is a trivial private format (magic + u16 h/w + raw
 grayscale). Real PNG/JPEG/video-frame decode would slot in behind
 ``decode_image`` — see the NotImplementedError branch (codec libs are not
 available in this environment; the Spark-side plumbing is identical).
+
+``resolve_media`` costs 0.34-0.36 ms/img single-thread (4-vCPU Xeon VM),
+most of it the seeded int16 noise draw and the rotation gather; its
+bytes are pinned by test_kernels.test_kernel_outputs_frozen.
 """
 
 from __future__ import annotations
 
 import re
 import struct
+import threading
 
 import numpy as np
 
@@ -56,18 +61,20 @@ def parse_media_ref(ref: str) -> tuple[list[str], int, int]:
 # Gather-index memo for rotate_nn, keyed on (h, w, deg): the source-pixel
 # mapping is a pure function of shape + angle, and canvas shapes cluster
 # (word-count x word-length-sum x skew combinations — the sf0.1 corpus has
-# 554 distinct keys, ~108 MB fully populated at ~5 B/pixel). The cap holds
+# 554 distinct keys, ~86 MB fully populated at 4 B/pixel). The cap holds
 # the whole working set and eviction is FIFO-single, not clear-all: the
 # original 128-entry clear-all cap THRASHED on the real corpus (working
 # set > cap wiped the dict every 128 misses — measured 1.24x slower on
-# the real ref stream). ~110 MB/worker worst case; at 32 workers that is
-# ~3.5 GB of a 128 GiB box, and a memory-tight deployment lowers the cap
+# the real ref stream). ~90 MB/worker worst case; at 32 workers that is
+# ~2.9 GB of a 128 GiB box, and a memory-tight deployment lowers the cap
 # rather than reverting to clear-all.
-_ROT_IDX: dict[tuple[int, int, float], tuple[np.ndarray, np.ndarray]] = {}
+_ROT_IDX: dict[tuple[int, int, float], np.ndarray] = {}
 _ROT_IDX_CAP = 512
 
 
-def _rot_nn_index(h: int, w: int, deg: float) -> tuple[np.ndarray, np.ndarray]:
+def _rot_nn_index(h: int, w: int, deg: float) -> np.ndarray:
+    """Flat gather indices into the image with one fill slot appended:
+    a destination pixel whose source falls outside reads index h*w."""
     key = (h, w, float(deg))
     cached = _ROT_IDX.get(key)
     if cached is None:
@@ -89,13 +96,12 @@ def _rot_nn_index(h: int, w: int, deg: float) -> tuple[np.ndarray, np.ndarray]:
         np.logical_or(invalid, xi >= w, out=invalid)
         np.logical_or(invalid, yi < 0, out=invalid)
         np.logical_or(invalid, yi >= h, out=invalid)
-        np.clip(xi, 0, w - 1, out=xi)
-        np.clip(yi, 0, h - 1, out=yi)
         flat = yi * np.int32(w)
         flat += xi  # flat gather indices, (h, w)
+        flat[invalid] = h * w  # the fill slot
         if len(_ROT_IDX) > _ROT_IDX_CAP:
             _ROT_IDX.pop(next(iter(_ROT_IDX)))  # FIFO: evict oldest entry
-        cached = _ROT_IDX[key] = (flat, invalid)
+        cached = _ROT_IDX[key] = flat
     return cached
 
 
@@ -104,69 +110,17 @@ def rotate_nn(img: np.ndarray, deg: float, fill: int | float = PAPER) -> np.ndar
 
     Inverse-mapped and fully vectorized; deterministic across platforms.
     The gather indices are memoized per (shape, angle) — recomputing them
-    was ~45% of the whole render path (BENCH.md r3 kernel profile)."""
+    was ~45% of the whole render path (BENCH.md r3 kernel profile). Pixels
+    whose source lies outside read a fill slot appended to the source, so
+    one gather does the whole rotation (a separate masked fill was 14 of
+    59 us/img)."""
     if deg == 0:
         return img.copy()
     h, w = img.shape
-    flat, invalid = _rot_nn_index(h, w, deg)
-    out = np.take(img.ravel(), flat)  # == img[yi, xi], same gather
-    out[invalid] = fill
-    return out
-
-
-def rotate_bilinear(img: np.ndarray, deg: float, fill: float) -> np.ndarray:
-    """Bilinear rotation about the center (same output size), float output.
-
-    Used on the *deskew* side: bilinear resampling smooths the staircase
-    artifacts that nearest-neighbor forward rotation introduced, so glyph
-    shapes survive the rotate/unrotate round trip.
-    """
-    if deg == 0:
-        return img.astype(np.float32)
-    h, w = img.shape
-    theta = np.deg2rad(deg)
-    cos_t, sin_t = np.float32(np.cos(theta)), np.float32(np.sin(theta))
-    cy, cx = np.float32((h - 1) / 2.0), np.float32((w - 1) / 2.0)
-    # broadcasted source coords (no meshgrid materialization)
-    xx = np.arange(w, dtype=np.float32)[None, :] - cx
-    yy = np.arange(h, dtype=np.float32)[:, None] - cy
-    xs = cos_t * xx + sin_t * yy + cx
-    ys = -sin_t * xx + cos_t * yy + cy
-    x0 = np.floor(xs).astype(np.int32)
-    y0 = np.floor(ys).astype(np.int32)
-    fx = xs - x0
-    fy = ys - y0
-    # clamp-to-edge gather, then overwrite fully-outside pixels with fill
-    x0c = np.clip(x0, 0, w - 1)
-    x1c = np.minimum(x0c + 1, w - 1)
-    y0c = np.clip(y0, 0, h - 1)
-    y1c = np.minimum(y0c + 1, h - 1)
-    imgf = img.astype(np.float32)
-    # flat-index gathers (np.take is measurably cheaper than 2-D fancy
-    # indexing here); arithmetic order matches the textbook weighted form
-    # g00*(1-fx) + g01*fx exactly, with in-place ops to cap temporaries —
-    # these full-crop float32 buffers are the UDF's peak memory
-    y0f = y0c * np.int32(w)
-    y1f = y1c * np.int32(w)
-    flat = imgf.ravel()
-    gx = 1 - fx
-    top = np.take(flat, y0f + x0c)
-    top *= gx
-    t2 = np.take(flat, y0f + x1c)
-    t2 *= fx
-    top += t2
-    bot = np.take(flat, y1f + x0c)
-    bot *= gx
-    b2 = np.take(flat, y1f + x1c)
-    b2 *= fx
-    bot += b2
-    top *= 1 - fy
-    bot *= fy
-    out = top
-    out += bot
-    outside = (xs < 0) | (xs > w - 1) | (ys < 0) | (ys > h - 1)
-    out[outside] = np.float32(fill)
-    return out
+    src = np.empty(h * w + 1, dtype=img.dtype)
+    src[:-1] = img.ravel()
+    src[-1] = fill
+    return np.take(src, _rot_nn_index(h, w, deg))  # == img[yi, xi] inside
 
 
 _SCALED_GLYPHS: dict[str, np.ndarray] = {
@@ -174,21 +128,55 @@ _SCALED_GLYPHS: dict[str, np.ndarray] = {
 }
 
 
+# Ink mask per word, built once: a vocabulary of a few dozen words
+# recurs across every image, and one block copy per word replaces one per
+# char (25 -> 8 us/img). Entries are read-only.
+_WORD_INK: dict[str, np.ndarray] = {}
+
+
+def _word_ink(word: str) -> np.ndarray:
+    ink = _WORD_INK.get(word)
+    if ink is None:
+        char_w = GLYPH_W * SCALE
+        ink = np.zeros((GLYPH_H * SCALE, len(word) * (char_w + CHAR_GAP) - CHAR_GAP), dtype=bool)
+        for i, ch in enumerate(word):
+            x = i * (char_w + CHAR_GAP)
+            ink[:, x : x + char_w] = _SCALED_GLYPHS[ch]
+        if len(_WORD_INK) > 4096:
+            _WORD_INK.clear()
+        _WORD_INK[word] = ink
+    return ink
+
+
 def _draw_words(words: list[str]) -> np.ndarray:
     """Render words on one text line as a boolean ink mask (no margins)."""
-    char_w = GLYPH_W * SCALE
-    char_h = GLYPH_H * SCALE
-    widths = [len(w) * char_w + (len(w) - 1) * CHAR_GAP for w in words]
-    total_w = sum(widths) + WORD_GAP * (len(words) - 1)
-    mask = np.zeros((char_h, total_w), dtype=bool)
+    inks = [_word_ink(w) for w in words]
+    total_w = sum(ink.shape[1] for ink in inks) + WORD_GAP * (len(words) - 1)
+    mask = np.zeros((GLYPH_H * SCALE, total_w), dtype=bool)
     x = 0
-    for w, wd in zip(words, widths):
-        cx = x
-        for ch in w:
-            mask[:, cx : cx + char_w] = _SCALED_GLYPHS[ch]
-            cx += char_w + CHAR_GAP
-        x += wd + WORD_GAP
+    for ink in inks:
+        mask[:, x : x + ink.shape[1]] = ink
+        x += ink.shape[1] + WORD_GAP
     return mask
+
+
+# One legacy RandomState per thread, re-seeded per image. Constructing
+# ``np.random.RandomState(seed)`` first seeds a fresh MT19937 from OS
+# entropy (a SeedSequence) and only then legacy-seeds it: 169 us of a
+# 411 us render. ``.seed(seed)`` on a kept generator is the same legacy
+# seeding (same stream) for ~3-5 us; thread-local because a RandomState
+# is not safe to share between threads rendering at once. The int16
+# ``randint`` draw itself stays: replicating it from raw 32-bit draws is
+# identical but slower (109 -> 144 us).
+_RNG = threading.local()
+
+
+def _noise_rng(seed: int) -> np.random.RandomState:
+    rng = getattr(_RNG, "rng", None)
+    if rng is None:
+        rng = _RNG.rng = np.random.RandomState(0)
+    rng.seed(seed)
+    return rng
 
 
 def render_image(words: list[str], skew: int, noise: int) -> np.ndarray:
@@ -201,15 +189,18 @@ def render_image(words: list[str], skew: int, noise: int) -> np.ndarray:
     pad_y = int(np.ceil(w / 2 * tan_s)) + 4
     pad_x = int(np.ceil(h / 2 * tan_s)) + 4
     canvas = np.full((h + 2 * pad_y, w + 2 * pad_x), PAPER, dtype=np.uint8)
-    canvas[pad_y : pad_y + h, pad_x : pad_x + w][ink] = INK
+    inner = canvas[pad_y : pad_y + h, pad_x : pad_x + w]
+    inner -= ink.view(np.uint8) * np.uint8(PAPER - INK)  # PAPER -> INK on ink
     canvas = rotate_nn(canvas, skew, fill=PAPER)
-    rng = np.random.RandomState(noise % (2**31))  # legacy RandomState: frozen algorithm
-    # int16 throughout: these full-canvas temporaries dominate memory traffic
-    # when 32 workers render concurrently (PAPER+NOISE_AMP < 255, no clip needed)
+    rng = _noise_rng(noise % (2**31))  # legacy RandomState: frozen algorithm
+    # the int16 draw IS the frozen stream; the add runs in uint8, where the
+    # wrapped jitter gives the exact sum because PAPER +/- NOISE_AMP stays
+    # inside 0..255 (half the passes of an int16 masked add: 52 -> 23 us/img)
     jitter = rng.randint(-NOISE_AMP, NOISE_AMP + 1, size=canvas.shape, dtype=np.int16)
-    noisy = canvas.astype(np.int16)
-    np.add(noisy, jitter, out=noisy, where=(canvas == PAPER))
-    return noisy.astype(np.uint8)
+    jitter8 = jitter.astype(np.uint8)
+    jitter8 *= canvas == PAPER
+    canvas += jitter8
+    return canvas
 
 
 def encode_image(img: np.ndarray) -> bytes:

@@ -10,20 +10,24 @@ Reference semantics being modeled (/root/reference src/common/database.cpp):
 - These are *different* mechanisms in the reference (empty-result frames
   advance the watermark but are not recorded as rows, database.cpp:50-60);
   we model both: the watermark is metrics metadata, while resume is driven
-  by the done-bucket set (anti-join), so zero-span documents still complete
-  their bucket.
+  by the done-bucket set, so zero-span documents still complete their
+  bucket.
 
-Scale design: resume is a **left anti join** of input buckets against the
-done set (SURVEY.md A3 — THE resume primitive), placed upstream of the
-expensive OCR UDF so pruning happens before any Python work. Buckets are
-``pmod(xxhash64(doc_id), n_buckets)`` — deterministic, independent of
-physical partitioning, and stable across cluster sizes. At 10^12 documents
-you'd raise n_buckets (e.g. 4096) so each bucket is a rewritable unit of
-work; the progress table stays tiny either way.
+Scale design: resume drops the done buckets (SURVEY.md A3 — THE resume
+primitive) upstream of the expensive OCR UDF, so pruning happens before
+any Python work. The done set has at most ``n_buckets`` rows, so it is
+collected to the driver and the pending buckets become an ``IN`` filter:
+no join, hence no shuffle of the input (a left anti join planned a
+sort-merge join that hash-exchanged the whole input on ``bucket``).
+Buckets are ``pmod(xxhash64(doc_id), n_buckets)`` — deterministic,
+independent of physical partitioning, and stable across cluster sizes.
+At 10^12 documents you'd raise n_buckets (e.g. 4096) so each bucket is
+a rewritable unit of work; the progress table stays tiny either way.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,6 +86,19 @@ class ProgressStore:
             .distinct()
         )
 
+    def done_ids(self, run_id: str) -> set[int]:
+        """The done buckets as a driver-side set. Before the first commit
+        of a local parquet store there is no table, and no Spark job is
+        run (the empty fallback relation of ``read`` is a Python RDD: its
+        first scan in a fresh session starts Python workers)."""
+        if (
+            tableio.TABLE_FORMAT == "parquet"
+            and "://" not in self.path
+            and not os.path.isdir(self.path)
+        ):
+            return set()
+        return {r["bucket"] for r in self.done_buckets(run_id).collect()}
+
     def append(self, rows: list[dict]) -> None:
         df = self.spark.createDataFrame(
             [tuple(r.get(f.name) for f in PROGRESS_SCHEMA.fields) for r in rows],
@@ -107,7 +124,7 @@ def extract_resumable(
     progress + lineage + metrics, and return the full output DataFrame.
 
     A killed run resumes without recomputing finished buckets: the next call
-    anti-joins them away before the OCR UDF ever sees their rows.
+    filters them out before the OCR UDF ever sees their rows.
 
     ``stop_requested`` (optional zero-arg callable) is the GRACEFUL
     SHUTDOWN hook (reference T5: SIGINT stops the decode loop after the
@@ -185,11 +202,13 @@ def _run_groups(
             return  # graceful: completed groups are committed; resume later
         # done set re-read per group: resume sees every previously
         # committed group, including from killed prior runs
-        done = store.done_buckets(run_id)
-        group = docs.where(F.pmod(F.col("bucket"), F.lit(bucket_groups)) == g)
-        pending = group.join(done, "bucket", "left_anti")
+        done = store.done_ids(run_id)
+        todo = [b for b in range(g, n_buckets, bucket_groups) if b not in done]
+        if not todo:
+            continue  # group fully done already (resume)
+        pending = docs.where(F.col("bucket").isin(todo))
         if pending.isEmpty():
-            continue  # group fully done already (resume) or empty
+            continue  # no input docs fall in the pending buckets
 
         t0 = time.time()
         snap0 = meter.snapshot()
@@ -200,9 +219,7 @@ def _run_groups(
 
         # per-bucket metrics + lineage from the *written* output (one extra
         # scan of the small output, not a recompute of the pipeline)
-        out = tableio.read_table(spark, out_dir).join(done, "bucket", "left_anti")
-        if bucket_groups > 1:
-            out = out.where(F.pmod(F.col("bucket"), F.lit(bucket_groups)) == g)
+        out = tableio.read_table(spark, out_dir).where(F.col("bucket").isin(todo))
         stats = (
             out.groupBy("bucket")
             .agg(

@@ -59,3 +59,20 @@ def test_curate_deterministic(spark, sf_dir):
     _, _, a = C.curate(spark, sf_dir)
     _, _, b = C.curate(spark, sf_dir)
     assert a == b
+
+
+def test_filter_jobs_carry_callers_job_group(spark, sf_dir):
+    """survivor_stages materializes its filter relations from pool
+    threads; every job it starts must still carry the caller's job group
+    (so a cancelJobGroup reaches them and per-group accounting sees them)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))  # jobs with no group
+    sc.setJobGroup("curate-group-test", "survivor_stages under a job group")
+    try:
+        C.survivor_stages(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("curate-group-test")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

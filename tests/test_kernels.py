@@ -7,6 +7,9 @@ content) — the golden layer the reference itself lacks (SURVEY.md §5).
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -139,6 +142,81 @@ def test_estimate_skew_subsample_invariant():
             mask = binarize(img)
             # dense-ink path must engage: these canvases carry > 2048 ink px
             assert estimate_skew(mask) == skew
+
+
+DIGEST_FIXTURE = Path(__file__).parent / "fixtures" / "kernel_digests.json"
+DIGEST_REFS, DIGEST_BLOCK = 2025, 45  # 9 skews x 3 word counts x 75 draws
+
+
+def digest_refs() -> list[str]:
+    """The seeded ref set the kernel digests cover: every angle in
+    SKEW_SET, 2-4 words, noise seeds over the whole u32 range (so the
+    ``noise % 2**31`` fold is exercised too)."""
+    rng = np.random.default_rng(9)
+    refs = []
+    for i in range(DIGEST_REFS):
+        n_words = 2 + (i // len(SKEW_SET)) % 3
+        words = [MEDIA_WORDS[k] for k in rng.integers(0, len(MEDIA_WORDS), size=n_words)]
+        refs.append(render.make_media_ref(words, SKEW_SET[i % len(SKEW_SET)], int(rng.integers(0, 2**32))))
+    return refs
+
+
+def kernel_digests() -> dict:
+    """md5 per block of refs of the ``resolve_media`` bytes and of the
+    ``recognize()`` word tuples (text, bbox, confidence)."""
+    import dataclasses
+    import hashlib
+
+    eng = Recognizer()
+    refs = digest_refs()
+    resolve, recognize = [], []
+    for b in range(0, len(refs), DIGEST_BLOCK):
+        hr, hw = hashlib.md5(), hashlib.md5()
+        for ref in refs[b : b + DIGEST_BLOCK]:
+            data = render.resolve_media(ref)
+            hr.update(data)
+            words = eng.recognize(render.decode_image(data))
+            hw.update(repr([dataclasses.astuple(w) for w in words]).encode() + b"\n")
+        resolve.append(hr.hexdigest())
+        recognize.append(hw.hexdigest())
+    return {"n_refs": len(refs), "block": DIGEST_BLOCK, "resolve_md5": resolve, "recognize_md5": recognize}
+
+
+def test_kernel_outputs_frozen():
+    """Kernel speed-ups must not change one output byte: the rendered
+    bytes and the recognized word tuples of 2,025 seeded refs match the
+    digests recorded before the per-thread render generator and the
+    recognize cuts (regenerate with ``python tests/gen_kernel_digests.py``
+    only for an intended output change)."""
+    want = json.loads(DIGEST_FIXTURE.read_text())
+    got = kernel_digests()
+    for kind in ("resolve_md5", "recognize_md5"):
+        bad = [i for i, (a, b) in enumerate(zip(got[kind], want[kind])) if a != b]
+        assert not bad, f"{kind}: blocks {bad} of {DIGEST_BLOCK} refs differ"
+    assert got == want
+
+
+def test_render_threads_agree():
+    """Renders from more threads than cores at once, switching as often as
+    the interpreter allows, give the bytes a single thread does: each
+    thread re-seeds its own noise generator, so no thread's seed can land
+    between another's seed and draw."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    refs = digest_refs()[:150]
+    want = [render.resolve_media(r) for r in refs]
+    n = 2 * len(os.sched_getaffinity(0)) + 1
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n) as ex:
+            runs = [ex.submit(lambda: [render.resolve_media(r) for r in refs]) for _ in range(n)]
+            got = [f.result(timeout=120) for f in runs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(g == want for g in got)
 
 
 def test_ref_memo_fifo_and_none_values():

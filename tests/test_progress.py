@@ -191,3 +191,25 @@ def test_lineage_fingerprint_recorded(spark, sf_dir, tmpdirs):
     # per-stage split (speed_meter analog) recorded from worker accumulators
     assert sum(r["ocr_s"] for r in rows) > 0
     assert sum(r["decode_s"] for r in rows) > 0
+
+
+def test_resume_filters_pending_buckets_without_a_join(spark, sf_dir, tmpdirs, monkeypatch):
+    """Each group's extraction input drops the done buckets with a
+    driver-side bucket list, not a shuffled anti-join against the progress
+    table: its executed plan holds no SortMergeJoin, on the first group
+    (no progress table yet) and on later groups (table present)."""
+    from ocr_suite_spark.operators import extract as X
+
+    out_dir, ckpt_dir = tmpdirs
+    docs = datagen.interleaved_from_documents(spark, sf_dir).limit(40)
+    real, plans = X.extract, []
+
+    def spy(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(X, "extract", spy)
+    res = extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=4, bucket_groups=2)
+    assert res.count() == 40
+    assert len(plans) == 2
+    assert not [p for p in plans if "SortMergeJoin" in p], plans[0]
