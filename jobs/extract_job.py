@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import time
 
 
@@ -70,8 +71,7 @@ def main() -> None:
     def _on_signal(signum, frame):
         if stop_flag["stop"]:
             signal.signal(signum, signal.SIG_DFL)
-            os_kill = __import__("os").kill
-            os_kill(__import__("os").getpid(), signum)
+            os.kill(os.getpid(), signum)
         print(f"[shutdown] signal {signum}: finishing current bucket group", flush=True)
         stop_flag["stop"] = True
 
@@ -100,7 +100,7 @@ def main() -> None:
         )
         n = out.count()
     wall = time.time() - t0
-    done = ProgressStore(spark, args.checkpoint).done_buckets(args.run_id).count()
+    done = len(ProgressStore(spark, args.checkpoint).done_ids(args.run_id))
     print(
         json.dumps(
             {

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 import time
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,16 +79,8 @@ class ProgressStore:
         except Exception:
             return self.spark.createDataFrame([], PROGRESS_SCHEMA)
 
-    def done_buckets(self, run_id: str) -> DataFrame:
-        return (
-            self.read()
-            .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("bucket")
-            .distinct()
-        )
-
     def done_ids(self, run_id: str) -> set[int]:
-        """The done buckets as a driver-side set. Before the first commit
+        """The run's done buckets as a driver-side set. Before the first commit
         of a local parquet store there is no table, and no Spark job is
         run (the empty fallback relation of ``read`` is a Python RDD: its
         first scan in a fresh session starts Python workers)."""
@@ -97,7 +90,8 @@ class ProgressStore:
             and not os.path.isdir(self.path)
         ):
             return set()
-        return {r["bucket"] for r in self.done_buckets(run_id).collect()}
+        done = self.read().where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        return {r["bucket"] for r in done.select("bucket").distinct().collect()}
 
     def append(self, rows: list[dict]) -> None:
         df = self.spark.createDataFrame(
@@ -167,8 +161,6 @@ def extract_resumable(
     # read failure after committed groups (corrupt footer, FS error,
     # catalog misconfig) must propagate, not masquerade as a clean empty
     # run with all buckets marked done.
-    import os
-
     def _has_data_files(d: str) -> bool:
         for root, _, files in os.walk(d):
             if any(f.endswith(".parquet") for f in files):
@@ -237,7 +229,7 @@ def _run_groups(
         )
         if not stats:
             continue  # pending docs were all zero-span: no output rows
-        now = __import__("datetime").datetime.now(__import__("datetime").timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc).replace(tzinfo=None)
         snap1 = meter.snapshot()
         total_docs = sum(r["n_docs"] for r in stats) or 1
         total_media = sum(r["n_media"] for r in stats) or 1

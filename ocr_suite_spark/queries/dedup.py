@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from .common import DUCK_TOKENS, floor3, t, tokens_col
 
 N_MINHASH = 8
-N_BANDS = 2  # 4 rows per band
 SHINGLE_K = 3
 
 # DuckDB fragment: ordered 3-token shingles from the normalized token list
@@ -73,17 +72,6 @@ def shingle_rows(docs: DataFrame) -> DataFrame:
         .where(F.col("_t2").isNotNull())
         .drop("_t2")
     )
-
-
-def _minhash_cols(sh: Column) -> list[Column]:
-    """MinHash signature: per seed s, min over shingles of md5('s|'+shingle).
-    Fixed-length hex strings make lexicographic min == numeric min."""
-    return [
-        F.array_min(F.transform(sh, lambda x: F.md5(F.concat(F.lit(f"{s}|"), x)))).alias(
-            f"mh{s}"
-        )
-        for s in range(N_MINHASH)
-    ]
 
 
 def _duck_minhash(s: int) -> str:
@@ -184,14 +172,6 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
 
 # ---------------------------------------------------------------------------
 # SimHash (16-bit, token-weighted)
-
-
-def _simhash_bits():
-    hexdig = "89abcdef"  # nibbles with the top bit set
-    return [
-        (j, tuple(hexdig))
-        for j in range(16)
-    ]
 
 
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
@@ -345,12 +325,6 @@ COS_THRESHOLD = 0.2  # with label×bucket blocking, 0.2 keeps ~71 pairs at
 # sf0.01, so the gate exercises real value comparison (r1's 0.5 passed
 # vacuously on 0 rows); production near-dup sweeps would sit at 0.9+ on
 # real embeddings
-
-COS_BLOCK_BITS = 4  # minimum sign-bit width of the blocking bucket; the
-# ACTUAL width is occupancy-bounded (blocking.py): bits grow with
-# log2(n / TARGET_OCCUPANCY), so this floor binds only on small corpora
-# (sf0.01 resolves to exactly 4 — the r3-era key)
-
 
 def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs by embedding cosine >= COS_THRESHOLD within the same

@@ -31,17 +31,6 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-# Flat extracted-span row (post-pipeline, pre-merge). `order` == input offset.
-EXTRACTED_FLAT = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("order", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-    ]
-)
-
 OUT_SPAN = T.StructType(
     [
         T.StructField("kind", T.StringType(), False),
@@ -55,21 +44,5 @@ EXTRACTED_MERGED = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(OUT_SPAN), False),
-    ]
-)
-
-# Word-level OCR output (reference text_entry, ocr_result.h:14-18):
-# one row per recognized word with bbox + confidence.
-OCR_WORDS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("order", T.IntegerType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("word", T.StringType(), False),
-        T.StructField("left", T.IntegerType(), False),
-        T.StructField("top", T.IntegerType(), False),
-        T.StructField("right", T.IntegerType(), False),
-        T.StructField("bottom", T.IntegerType(), False),
-        T.StructField("confidence", T.FloatType(), False),
     ]
 )

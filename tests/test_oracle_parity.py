@@ -11,7 +11,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).parent))
 from driver_sim import compare, duck_con  # noqa: E402
 
-from ocr_suite_spark.queries import GOLDEN_QUERIES, REGISTRY  # noqa: E402
+from ocr_suite_spark.queries import FROZEN, GOLDEN_QUERIES, REGISTRY  # noqa: E402
 from ocr_suite_spark.queries.common import GOLDEN_SF_DIR  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
@@ -76,56 +76,17 @@ def test_every_query_has_an_oracle():
     assert missing == [], missing
 
 
-# Queries allowed to sit past the driver's 50-entry grading prefix. The
-# R02 list retired in r5 (its last five members re-graded); the residual
-# r3-frozen set is 15 — 12 trivial row-local projections/filters with
-# pytest third engines plus sessionize_gap, quality_gopher_rules, and
-# kmeans_2iter, which ceded their r5 rotation slots to the brand-new
-# bpe_encode_stats, dsir_importance, and dedup_substring_spans (three
-# over the <= 12 VERDICT r3 budget, disclosed: they carry the strongest
-# independent coverage of the rotation set — dedicated oracle + plan +
-# invariants tests, Python third-engine recomputations (all four Gopher
-# signals; kmeans' exact integer fixed-point), the streaming twins'
-# value-parity tests, and kmeans_2iter also runs in the headline bench
-# and underpins the r5-graded dedup_semdedup). Anything NOT on a frozen
-# list must stay inside the prefix so it gets a driver row, and every
-# frozen member's fn-source +
-# oracle SQL is HASH-PINNED (test_frozen_bodies_unchanged below — ADVICE
-# r4 #2: enforce the freeze, don't assert it in comments).
-R03_PROVEN_FROZEN = {
-    "media_frame_sample", "dedup_exact", "pii_scrub", "chunk_windows",
-    "sample_hash_fraction", "sample_stratified", "epoch_shuffle",
-    "dedup_url_canonical", "asof_join_prior_view", "rolling_range_1d",
-    "j2_hash_id_mint", "o1_size_ranked_assign", "sessionize_gap",
-    "quality_gopher_rules", "kmeans_2iter",
-}
-
-# Green in CORRECTNESS_r04.json (rows+schema+hash), bodies hash-pinned
-# frozen since.
-R04_PROVEN_FROZEN = {
-    "pack_sequences_tokens", "bpe_pair_counts", "corpus_stats_rollup",
-    "pack_sequences", "p7_coord_normalize", "p10_filename_ts",
-    "j4_point_lookup", "a8_progress_pct", "a1_watermark_max",
-    "a3_resume_antijoin", "j1_dict_like_join", "j3_pair_by_key",
-    "a5_group_collect_ordered", "a6_match_count", "w1_global_sort",
-    "w2_time_rollup", "w2_tree_rollup", "p11_relative_time",
-    "w3_running_max", "w4_lead_lag", "o3_top1_per_group",
-    "s13_json_line", "s14_csv_line", "s15_json_parse",
-    "q1_pricing_summary", "q3_top_revenue", "q6_forecast_revenue",
-    "q12_shipmode_priority", "ann_topk_bruteforce", "ann_lsh_histogram",
-    "ann_lsh_topk", "ann_ivf_topk", "lang_id_ngram", "quality_score",
-    "token_count", "doc_fingerprint",
-}
-
-
 def test_grading_prefix_covers_unproven_queries():
     """The driver grades exactly the first 50 registry entries. Every query
-    that is new or changed (i.e. not on a frozen proven list) must sit
-    inside that prefix, or it ships without any driver row."""
+    not in ``FROZEN`` must sit inside that prefix, or it ships without any
+    driver row; the frozen ones fill the rest."""
     names = list(REGISTRY)
-    frozen = R03_PROVEN_FROZEN | R04_PROVEN_FROZEN
-    ungraded = [n for n in names[50:] if n not in frozen]
-    assert ungraded == [], f"queries past the grading prefix without prior proof: {ungraded}"
+    assert FROZEN <= set(names), sorted(FROZEN - set(names))
+    assert [n for n in names[:50] if n in FROZEN] == []
+    assert set(names[50:]) == FROZEN, (
+        "queries past the grading prefix without prior proof: "
+        f"{sorted(set(names[50:]) - FROZEN)}"
+    )
 
 
 def _frozen_body_hash(name: str) -> str:
@@ -147,20 +108,19 @@ def _frozen_body_hash(name: str) -> str:
 
 
 def test_frozen_bodies_unchanged():
-    """ADVICE r4 #2: a demoted query shipping on a prior round's proof must
-    be BYTE-frozen (fn source + rendered oracle SQL), not just asserted
-    frozen. On legitimate change: move the query into the grading prefix
-    and regenerate with `python tests/gen_frozen_hashes.py` AFTER the
-    round's verdict records the new proof."""
+    """ADVICE r4 #2: a query shipping on a prior round's proof must be
+    BYTE-frozen (fn source + rendered oracle SQL), not just asserted
+    frozen. On legitimate change: remove it from ``queries.FROZEN`` and
+    regenerate with `python tests/gen_frozen_hashes.py`."""
     import json
     import os
 
     fixture = os.path.join(os.path.dirname(__file__), "fixtures", "frozen_hashes.json")
     want = json.load(open(fixture))
-    frozen = sorted(R03_PROVEN_FROZEN | R04_PROVEN_FROZEN)
-    assert sorted(want) == frozen, "frozen list changed; regenerate frozen_hashes.json"
+    frozen = sorted(FROZEN)
+    assert sorted(want) == frozen, "queries.FROZEN changed; regenerate frozen_hashes.json"
     drift = [n for n in frozen if _frozen_body_hash(n) != want[n]]
     assert drift == [], (
-        f"frozen query bodies changed without re-grading: {drift} — move them "
-        "into the 50-entry grading prefix (queries/__init__._PRIORITY)"
+        f"frozen query bodies changed without re-grading: {drift} — remove "
+        "them from queries.FROZEN so they move into the 50-entry grading prefix"
     )

@@ -36,7 +36,7 @@ def test_full_run_then_noop_resume(spark, sf_dir, tmpdirs, monkeypatch):
     assert len(seq1) == 120
 
     store = ProgressStore(spark, ckpt_dir)
-    n_done = store.done_buckets("run-1").count()
+    n_done = len(store.done_ids("run-1"))
     assert n_done == 8
 
     # second run: everything done -> no extraction at all, no new progress
@@ -67,7 +67,7 @@ def test_resume_after_simulated_kill(spark, sf_dir, tmpdirs):
     for b in range(4, 8):
         shutil.rmtree(f"{out_dir}-b/bucket={b}", ignore_errors=True)
 
-    assert store.done_buckets("run-1").count() == 4
+    assert len(store.done_ids("run-1")) == 4
 
     res = extract_resumable(spark, docs, out_dir + "-b", ckpt_dir, n_buckets=8)
     assert _sequences(res) == want
@@ -114,7 +114,7 @@ def test_group_checkpoint_survives_real_midrun_kill(spark, sf_dir, tmpdirs):
             on_error="fail",
         )
     store = ProgressStore(spark, ckpt_dir)
-    done_before = {r["bucket"] for r in store.done_buckets("run-1").collect()}
+    done_before = store.done_ids("run-1")
     assert done_before, "no group committed before the kill"
     assert all(b % 4 != 3 for b in done_before)  # the failed group never committed
 
@@ -151,7 +151,7 @@ def test_graceful_stop_between_groups(spark, sf_dir, tmpdirs):
         stop_requested=stop_after_two_groups,
     )
     store = ProgressStore(spark, ckpt_dir)
-    done = {r["bucket"] for r in store.done_buckets("run-1").collect()}
+    done = store.done_ids("run-1")
     assert done and all(b % 4 in (0, 1) for b in done)  # only groups 0-1 ran
 
     res = extract_resumable(
@@ -177,7 +177,7 @@ def test_graceful_stop_before_first_group(spark, sf_dir, tmpdirs):
     assert res.count() == 0
     assert {f.name for f in res.schema.fields} >= {"doc_id", "spans"}
     # and nothing was marked done — a later run starts from scratch
-    assert ProgressStore(spark, ckpt_dir).done_buckets("run-1").count() == 0
+    assert len(ProgressStore(spark, ckpt_dir).done_ids("run-1")) == 0
 
 
 def test_lineage_fingerprint_recorded(spark, sf_dir, tmpdirs):
