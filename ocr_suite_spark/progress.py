@@ -10,8 +10,10 @@ Reference semantics being modeled (/root/reference src/common/database.cpp):
 - These are *different* mechanisms in the reference (empty-result frames
   advance the watermark but are not recorded as rows, database.cpp:50-60);
   we model both: the watermark is metrics metadata, while resume is driven
-  by the done-bucket set, so zero-span documents still complete their
-  bucket.
+  by the done-bucket set. Zero-span documents still complete their bucket:
+  a group's progress rows are aggregated from its input, where such a
+  document is a row, not from the output it wrote, where it has none (a
+  group of only zero-span documents writes no data file at all).
 
 Scale design: resume drops the done buckets (SURVEY.md A3 — THE resume
 primitive) upstream of the expensive OCR UDF, so pruning happens before
@@ -29,9 +31,8 @@ from __future__ import annotations
 
 import os
 import time
-from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -93,12 +94,51 @@ class ProgressStore:
         done = self.read().where((F.col("run_id") == run_id) & (F.col("status") == "done"))
         return {r["bucket"] for r in done.select("bucket").distinct().collect()}
 
-    def append(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in PROGRESS_SCHEMA.fields) for r in rows],
-            PROGRESS_SCHEMA,
-        )
-        tableio.append_table(df.coalesce(1), self.path)
+    def append(self, rows: DataFrame) -> None:
+        """Append ``rows`` (PROGRESS_SCHEMA's columns) as one file."""
+        tableio.append_table(rows.coalesce(1), self.path)
+
+
+def _progress_rows(
+    pending: DataFrame, run_id: str, bucket_groups: int,
+    wall: float, decode_s: float, ocr_s: float,
+) -> DataFrame:
+    """A committed group's ``done`` rows, one per bucket of its input
+    ``pending``, aggregated in the engine. Only ``spans.kind`` and
+    ``spans.offset`` are extracted, so nested pruning keeps text and refs
+    out of the scan."""
+    kinds, offsets = F.col("spans.kind"), F.col("spans.offset")
+    stats = pending.groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(offsets)).alias("n_spans"),
+        F.sum(F.size(F.filter(kinds, lambda k: k == "media"))).alias("n_media"),
+        F.max(F.array_max(offsets)).alias("max_offset"),
+        # order-independent input fingerprint; XOR (not SUM) so it
+        # can't overflow under ANSI mode
+        F.bit_xor(F.xxhash64("doc_id")).alias("lineage"),
+    )
+    # speed_meter analog (speed_meter.cpp:49-50): group-level rate plus the
+    # decode/ocr stage split from worker accumulators, attributed to
+    # buckets by media share. The window is the group's rows, keyed on the
+    # group index: the optimizer drops a literal key (EliminateWindowPartitions)
+    # and warns about the unpartitioned window that is left.
+    group = Window.partitionBy(F.col("bucket") % bucket_groups)
+    share = F.col("n_media") / F.greatest(F.sum("n_media").over(group), F.lit(1))
+    return stats.select(
+        F.lit(run_id).alias("run_id"),
+        "bucket",
+        F.lit("done").alias("status"),
+        "n_docs",
+        "n_spans",
+        "n_media",
+        "max_offset",
+        "lineage",
+        F.lit(wall).alias("wall_secs"),
+        F.try_divide(F.sum("n_docs").over(group), F.lit(wall)).alias("docs_per_sec"),
+        (F.lit(decode_s) * share).alias("decode_s"),
+        (F.lit(ocr_s) * share).alias("ocr_s"),
+        F.current_timestamp().alias("updated_at"),
+    )
 
 
 def extract_resumable(
@@ -133,12 +173,15 @@ def extract_resumable(
     committing its output partitions AND its progress rows before the next
     starts — the unit of loss on failure becomes n_buckets/g buckets
     (reference analog: per-frame progress commits, database.cpp:85-108).
-    Pick g so each group is minutes of cluster work: per-group fixed cost
-    is one job submission + one progress append (~1-2 s here), so at
-    10^12 docs g in the hundreds keeps overhead <1% while bounding loss.
+    Pick g so each group is minutes of cluster work: a group runs ~15
+    Spark jobs (done set, emptiness probe, OCR-stage sizing, write,
+    progress append), and a warm 250-doc group took 1.6-2.2 s of wall on
+    4 local cores (sf0.01, n_buckets=16, g=2), so at 10^12 docs g in the
+    hundreds keeps overhead <1% while bounding loss.
     """
     from .lock import SingleInstanceLock
     from .metrics import SpeedMeter
+    from .operators import extract as X
 
     store = ProgressStore(spark, ckpt_dir)
     docs = documents.withColumn("bucket", bucket_col(n_buckets))
@@ -149,10 +192,32 @@ def extract_resumable(
     # T6: exactly one extraction per checkpoint dir (reference
     # single-instance semantics incl. stale-lock takeover, lock.py)
     with SingleInstanceLock(ckpt_dir):
-        _run_groups(
-            spark, store, docs, out_dir, run_id, n_buckets,
-            meter, on_error, bucket_groups, stop_requested,
-        )
+        for g in range(bucket_groups):
+            if stop_requested is not None and stop_requested():
+                break  # graceful: completed groups are committed; resume later
+            # done set re-read per group: resume sees every previously
+            # committed group, including from killed prior runs
+            done = store.done_ids(run_id)
+            todo = [b for b in range(g, n_buckets, bucket_groups) if b not in done]
+            if not todo:
+                continue  # group fully done already (resume)
+            pending = docs.where(F.col("bucket").isin(todo))
+            if pending.isEmpty():
+                continue  # no input docs fall in the pending buckets
+
+            t0 = time.time()
+            snap0 = meter.snapshot()
+            merged = X.extract(pending.drop("bucket"), meter=meter, on_error=on_error)
+            result = merged.withColumn("bucket", bucket_col(n_buckets))
+            tableio.write_table(result, out_dir, mode="overwrite", partition_by=["bucket"])
+            wall = time.time() - t0
+            snap1 = meter.snapshot()
+            store.append(
+                _progress_rows(
+                    pending, run_id, bucket_groups, wall,
+                    snap1.decode_s - snap0.decode_s, snap1.ocr_s - snap0.ocr_s,
+                )
+            )
     # The final read must survive a graceful stop that fired before group 0
     # ever wrote (out_dir absent) and a first group that wrote zero rows (a
     # partitioned empty write leaves a directory with no data files) — both
@@ -182,79 +247,3 @@ def extract_resumable(
         return spark.createDataFrame([], empty)
     return tableio.read_table(spark, out_dir)
 
-
-def _run_groups(
-    spark, store, docs, out_dir, run_id, n_buckets,
-    meter, on_error, bucket_groups, stop_requested=None,
-) -> None:
-    from .operators import extract as X
-
-    for g in range(bucket_groups):
-        if stop_requested is not None and stop_requested():
-            return  # graceful: completed groups are committed; resume later
-        # done set re-read per group: resume sees every previously
-        # committed group, including from killed prior runs
-        done = store.done_ids(run_id)
-        todo = [b for b in range(g, n_buckets, bucket_groups) if b not in done]
-        if not todo:
-            continue  # group fully done already (resume)
-        pending = docs.where(F.col("bucket").isin(todo))
-        if pending.isEmpty():
-            continue  # no input docs fall in the pending buckets
-
-        t0 = time.time()
-        snap0 = meter.snapshot()
-        merged = X.extract(pending.drop("bucket"), meter=meter, on_error=on_error)
-        result = merged.withColumn("bucket", bucket_col(n_buckets))
-        tableio.write_table(result, out_dir, mode="overwrite", partition_by=["bucket"])
-        wall = time.time() - t0
-
-        # per-bucket metrics + lineage from the *written* output (one extra
-        # scan of the small output, not a recompute of the pipeline)
-        out = tableio.read_table(spark, out_dir).where(F.col("bucket").isin(todo))
-        stats = (
-            out.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                F.sum(
-                    F.size(F.filter(F.col("spans"), lambda s: s["kind"] == "media"))
-                ).alias("n_media"),
-                F.max(F.element_at(F.col("spans"), -1)["order"]).alias("max_offset"),
-                # order-independent input fingerprint; XOR (not SUM) so it
-                # can't overflow under ANSI mode
-                F.bit_xor(F.xxhash64("doc_id")).alias("lineage"),
-            )
-            .collect()
-        )
-        if not stats:
-            continue  # pending docs were all zero-span: no output rows
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        snap1 = meter.snapshot()
-        total_docs = sum(r["n_docs"] for r in stats) or 1
-        total_media = sum(r["n_media"] for r in stats) or 1
-        g_decode = snap1.decode_s - snap0.decode_s
-        g_ocr = snap1.ocr_s - snap0.ocr_s
-        store.append(
-            [
-                {
-                    "run_id": run_id,
-                    "bucket": r["bucket"],
-                    "status": "done",
-                    "n_docs": r["n_docs"],
-                    "n_spans": r["n_spans"],
-                    "n_media": r["n_media"],
-                    "max_offset": r["max_offset"],
-                    "lineage": r["lineage"],
-                    "wall_secs": wall,
-                    # speed_meter analog (speed_meter.cpp:49-50): group-level
-                    # rate plus the decode/ocr stage split from worker
-                    # accumulators, attributed to buckets by media share
-                    "docs_per_sec": total_docs / wall if wall > 0 else None,
-                    "decode_s": g_decode * r["n_media"] / total_media,
-                    "ocr_s": g_ocr * r["n_media"] / total_media,
-                    "updated_at": now,
-                }
-                for r in stats
-            ]
-        )

@@ -181,6 +181,8 @@ def test_graceful_stop_before_first_group(spark, sf_dir, tmpdirs):
 
 
 def test_lineage_fingerprint_recorded(spark, sf_dir, tmpdirs):
+    from ocr_suite_spark import tableio
+
     out_dir, ckpt_dir = tmpdirs
     docs = datagen.interleaved_from_documents(spark, sf_dir).limit(50)
     extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=4)
@@ -191,6 +193,50 @@ def test_lineage_fingerprint_recorded(spark, sf_dir, tmpdirs):
     # per-stage split (speed_meter analog) recorded from worker accumulators
     assert sum(r["ocr_s"] for r in rows) > 0
     assert sum(r["decode_s"] for r in rows) > 0
+
+    # the rows are aggregated from the input; on documents that all have
+    # spans they equal the same aggregates over the written output
+    out = tableio.read_table(spark, out_dir).groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size("spans")).alias("n_spans"),
+        F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "media"))).alias("n_media"),
+        F.max(F.element_at("spans", -1)["order"]).alias("max_offset"),
+        F.bit_xor(F.xxhash64("doc_id")).alias("lineage"),
+    )
+    stats = ("n_docs", "n_spans", "n_media", "max_offset", "lineage")
+    want = {r["bucket"]: tuple(r[c] for c in stats) for r in out.collect()}
+    assert {r["bucket"]: tuple(r[c] for c in stats) for r in rows} == want
+
+
+def test_zero_span_group_completes(spark, sf_dir, tmpdirs, monkeypatch):
+    """A group whose documents all have ``spans=[]`` writes no output rows,
+    and the first such write leaves ``out_dir`` with no data file. Its
+    buckets are still marked done, so a second run extracts nothing."""
+    from ocr_suite_spark.operators import extract as X
+    from ocr_suite_spark.progress import bucket_col
+
+    out_dir, ckpt_dir = tmpdirs
+    docs = datagen.interleaved_from_documents(spark, sf_dir).limit(40)
+    # group 0 of 2 holds the even buckets (of 4): empty their documents
+    even = bucket_col(4) % 2 == 0
+    no_spans = F.array().cast(docs.schema["spans"].dataType)
+    docs = docs.withColumn("spans", F.when(even, no_spans).otherwise(F.col("spans"))).cache()
+    buckets = {r[0] for r in docs.select(bucket_col(4)).distinct().collect()}
+    assert {b % 2 for b in buckets} == {0, 1}
+
+    res = extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=4, bucket_groups=2)
+    assert res.count() == docs.where(~even).count()
+    assert buckets <= ProgressStore(spark, ckpt_dir).done_ids("run-1")
+
+    real, calls = X.extract, []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(X, "extract", spy)
+    extract_resumable(spark, docs, out_dir, ckpt_dir, n_buckets=4, bucket_groups=2)
+    assert not calls
 
 
 def test_resume_filters_pending_buckets_without_a_join(spark, sf_dir, tmpdirs, monkeypatch):
